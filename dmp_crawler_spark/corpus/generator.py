@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dmp_crawler_spark.corpus import templates
+from dmp_crawler_spark.extractors.udfs import fetch_extract_pass
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -57,199 +58,38 @@ def write_pages(spark: SparkSession, n_urls: int, path: str, partitions: int | N
 
 class GeneratorFetcher:
     """Simulated HTTP fetch that regenerates the deterministic corpus page
-    from the URL itself, executor-side (mapInPandas over the admitted set).
+    from the URL itself, executor-side, inside the shared fetch+extract
+    pass (extractors/udfs.fetch_extract_pass).
 
     Production fetch is per-URL work with no data-plane input (an HTTP GET
     per row); joining a materialized corpus table instead — as
     CorpusFetcher does — adds a full corpus scan + shuffle per iteration
     that no real crawler pays. This fetcher models the real cost shape:
-    O(admitted) CPU, embarrassingly parallel, zero scan. Used by bench.py
-    for the N-vs-4N scaling evidence; CorpusFetcher remains the fixture
-    for fetch-miss/retry tests."""
-
-    # contract: kind='link' out_url values are already resolved
-    # (py_resolve_link ≡ urljoin) AND normalized (py_normalize_url ≡
-    # normalize_url, both parity-tested) — the scheduler skips its
-    # per-link resolve+normalize pass
-    links_normalized = True
+    O(admitted) CPU, embarrassingly parallel, zero scan, no misses. Used
+    by bench.py and the benchmark; CorpusFetcher runs the same pass over
+    a corpus join and is the fixture for fetch-miss/retry tests."""
 
     def __init__(self, spark: SparkSession, n_urls: int):
         self.spark = spark
         self.n_urls = n_urls
 
-    def fetch(self, admitted: DataFrame) -> tuple[DataFrame, DataFrame]:
-        from pyspark.sql import types as T
-
+    def fetch_extract(self, admitted: DataFrame) -> DataFrame:
         n = self.n_urls
-        out_schema = T.StructType(
-            admitted.schema.fields
-            + [
-                T.StructField("warc_ts", T.TimestampType(), False),
-                T.StructField("html", T.BinaryType(), False),
-                T.StructField("text", T.StringType(), False),
-                T.StructField("lang", T.StringType(), False),
-            ]
-        )
 
-        def gen(batches):
-            for pdf in batches:
-                idxs = (
-                    pdf["url"].str.rsplit("/", n=1).str[-1]
-                    .str.replace(".html", "", regex=False).astype(int)
-                )
-                pages = [templates.build_page(int(i), n) for i in idxs]
-                out = pdf.copy()
-                out["warc_ts"] = [p["warc_ts"].replace(tzinfo=None) for p in pages]
-                out["html"] = [p["html"] for p in pages]
-                out["text"] = [p["text"] for p in pages]
-                out["lang"] = [p["lang"] for p in pages]
-                yield out
+        def page_of(row: dict) -> tuple[str, str, str]:
+            idx = int(row["url"].rsplit("/", 1)[-1].replace(".html", ""))
+            page = templates.build_page(idx, n)
+            return page["html_str"], page["lang"], page["text"]
 
         # The admitted set is tiny in bytes (urls + meta), so AQE coalesces
         # it to 1-2 partitions — which would serialize the expensive Python
-        # fetch stage. Repartition to full width first: a few-MB shuffle
-        # buys a cluster-wide fetch stage (same reasoning as production,
-        # where the fetch stage is sized by URL count, not byte size).
+        # pass. Repartition to full width first: a few-MB shuffle buys a
+        # cluster-wide fetch stage (same reasoning as production, where the
+        # fetch stage is sized by URL count, not byte size).
         width = self.spark.sparkContext.defaultParallelism
-        fetched = admitted.repartition(width, "url").mapInPandas(gen, out_schema)
-        missed = self.spark.createDataFrame([], admitted.schema)
-        return fetched, missed
-
-
-    def fetch_extract(self, admitted: DataFrame) -> DataFrame:
-        """Fused fetch+extract: one Python pass per admitted URL producing
-        kind='page' (frontier meta + lang), kind='result' (extracted
-        fields) and kind='link' (discovered edges) rows. The html is
-        consumed inside the worker and never crosses the Arrow boundary —
-        at 30-100KB/page that halves stage I/O and removes the biggest
-        executor-memory consumer (the cached html column) from the loop.
-        This is the production shape of crawler4j's visit(): download and
-        parse in the same worker (…/main/CrawlerManager.java:102-108)."""
-        import re as _re
-
-        from pyspark.sql import types as T
-
-        from dmp_crawler_spark.extractors import oracle
-        from dmp_crawler_spark.extractors.udfs import _HREF_RE
-
-        n = self.n_urls
-        # same flags as the pandas str.extractall path (no DOTALL) so both
-        # fetchers discover identical link sets
-        href_re = _re.compile(_HREF_RE)
-        meta_fields = [f.name for f in admitted.schema.fields]
-        out_schema = T.StructType(
-            admitted.schema.fields
-            + [
-                T.StructField("kind", T.StringType(), False),
-                T.StructField("rowkey", T.StringType(), True),
-                T.StructField("family", T.StringType(), True),
-                T.StructField("cols", T.MapType(T.StringType(), T.StringType()), True),
-                T.StructField("out_url", T.StringType(), True),
-                T.StructField("anchor", T.StringType(), True),
-                T.StructField("lang", T.StringType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
+        return fetch_extract_pass(
+            admitted.repartition(width, "url"), admitted.columns, page_of
         )
-        extra = ["kind", "rowkey", "family", "cols", "out_url", "anchor",
-                 "lang", "text"]
-
-        def gen(batches):
-            import pandas as pd
-
-            from dmp_crawler_spark.frontier.urlnorm import (
-                py_normalize_url,
-                py_resolve_link,
-            )
-
-            # link rows dominate the output volume (~40×/page): carry only
-            # (url=src, out_url, depth) and pre-combine duplicate edges
-            # map-side — the Python analog of a partial aggregate before
-            # the shuffle. The combine keys on the RESOLVED absolute URL
-            # (py_resolve_link ≡ urljoin, parity-tested in
-            # tests/test_frontier.py): keying on the raw href would merge
-            # directory-relative hrefs from different source directories
-            # and silently drop a discoverable URL (ADVICE r01). The
-            # window is the whole PARTITION, not one Arrow batch: at the
-            # default 256-row batches a per-batch dict only spans 256
-            # pages and popular cross-page links survive ~7× (measured
-            # 800k vs 560k link rows/iteration at bench scale). Bounded:
-            # past _LINK_FLUSH entries the dict is flushed as a partial
-            # frame, so executor memory never scales with partition size
-            # (500k entries ≈ 100 MB of Python dict — sized for the
-            # spark.executor.pyspark.memory defaults, not for this box).
-            _LINK_FLUSH = 500_000
-            link_min_depth: dict[str, tuple] = {}
-
-            def links_frame():
-                # normalize ONCE PER UNIQUE link at flush time (the
-                # links_normalized contract: downstream skips its
-                # resolve+normalize pass entirely), re-combining keys
-                # that normalization collapses
-                norm_min: dict[str, tuple] = {}
-                for raw, (src, d) in link_min_depth.items():
-                    key = py_normalize_url(raw)
-                    prev = norm_min.get(key)
-                    if prev is None or d < prev[1]:
-                        norm_min[key] = (src, d)
-                n_links = len(norm_min)
-                link_cols: dict[str, list] = {
-                    c: [None] * n_links for c in meta_fields + extra
-                }
-                link_cols["out_url"] = list(norm_min.keys())
-                link_cols["url"] = [s for s, _ in norm_min.values()]
-                link_cols["depth"] = [d for _, d in norm_min.values()]
-                link_cols["kind"] = ["link"] * n_links
-                return pd.DataFrame(link_cols, columns=meta_fields + extra)
-
-            for pdf in batches:
-                rows: dict[str, list] = {c: [] for c in meta_fields + extra}
-
-                def emit(meta, kind, rowkey=None, family=None, cols=None,
-                         out_url=None, anchor=None, lang=None, text=None):
-                    for c in meta_fields:
-                        rows[c].append(meta[c])
-                    rows["kind"].append(kind)
-                    rows["rowkey"].append(rowkey)
-                    rows["family"].append(family)
-                    rows["cols"].append(cols)
-                    rows["out_url"].append(out_url)
-                    rows["anchor"].append(anchor)
-                    rows["lang"].append(lang)
-                    rows["text"].append(text)
-
-                for meta in pdf.to_dict("records"):
-                    idx = int(meta["url"].rsplit("/", 1)[-1].replace(".html", ""))
-                    page = templates.build_page(idx, n)
-                    html = page["html_str"]
-                    # kind='page' rows are the pages-table landing (north
-                    # star: fetched pages land in an Iceberg table with a
-                    # boilerplate-stripped text column); html bytes are
-                    # elided from the log only for sandbox disk budget.
-                    emit(meta, "page", lang=page["lang"], text=page["text"])
-                    d = meta["depth"]
-                    src = meta["url"]
-                    for m in href_re.finditer(html):
-                        key = py_resolve_link(src, m.group(1))
-                        prev = link_min_depth.get(key)
-                        if prev is None or d < prev[1]:
-                            link_min_depth[key] = (src, d)
-                    for r in oracle.extract(src, html):
-                        emit(meta, "result", rowkey=r["rowkey"],
-                             family=r["family"], cols=r["cols"])
-
-                # page/result rows are yielded per batch (bounded memory);
-                # link rows accumulate across the partition and land as
-                # their own frame(s) below
-                yield pd.DataFrame(rows, columns=meta_fields + extra)
-                if len(link_min_depth) >= _LINK_FLUSH:
-                    yield links_frame()
-                    link_min_depth.clear()
-
-            if link_min_depth:
-                yield links_frame()
-
-        width = self.spark.sparkContext.defaultParallelism
-        return admitted.repartition(width, "url").mapInPandas(gen, out_schema)
 
 
 def generate_seeds(spark: SparkSession, n_urls: int, n_seeds: int = 32) -> DataFrame:

@@ -274,29 +274,29 @@ def dedup_candidates(candidates: DataFrame, seen: DataFrame | None,
     shard, so an iteration crawling few hosts reads few shards.
 
     With manifest_path=None (bloom gated off below the engine's
-    bloom_min_seen threshold, or disabled) every candidate goes straight
+    bloom_min_seen threshold) every candidate goes straight
     to the exact anti-join — no Arrow prefilter round trip, no persist
     unless the shard-prune collect needs one.
 
     Falls back to the legacy url-string join when either side lacks the
     fingerprint columns (plain-url seen tables in tests/tools)."""
-    use_bloom = manifest_path is not None and os.path.exists(manifest_path)
-    tagged = prefilter(candidates, manifest_path) if use_bloom else candidates
+    have_bloom = manifest_path is not None and os.path.exists(manifest_path)
+    tagged = prefilter(candidates, manifest_path) if have_bloom else candidates
     if seen is None:
-        return tagged.drop("maybe_seen") if use_bloom else tagged
+        return tagged.drop("maybe_seen") if have_bloom else tagged
     hash_keyed = (
         {"url_hash", "url_hash2"} <= set(seen.columns)
         and {"url_hash", "url_hash2"} <= set(candidates.columns)
     )
     if not hash_keyed:
-        if not use_bloom:
+        if not have_bloom:
             return candidates.join(seen.select("url"), "url", "left_anti")
         definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
         survived = maybe.join(seen.select("url"), "url", "left_anti")
         return definitely_new.unionByName(survived)
     cache = None
-    if use_bloom:
+    if have_bloom:
         # materialize the tagged candidates once: the shard-set collect
         # below and the two downstream branches (definitely-new,
         # maybe-seen) all reuse it instead of recomputing the

@@ -34,8 +34,7 @@ def priority_window():
 
 def admit(frontier: DataFrame, per_host_budget: int,
           global_budget: int | None = None,
-          delay_window_ms: int | None = None,
-          n_salts: int | None = None) -> DataFrame:
+          delay_window_ms: int | None = None) -> DataFrame:
     """Rank pending frontier rows and admit ≤ budget per host (and
     optionally ≤ global_budget overall, lowest-rank-first — the
     setMaxPagesToFetch analog).
@@ -45,45 +44,15 @@ def admit(frontier: DataFrame, per_host_budget: int,
     floor(window/delay) for hosts with a delay — the declarative form of
     the reference's per-host sleeps.
 
-    n_salts enables the north-rule salted skew path: a Zipf-hot host can
-    hold a large fraction of a 10^10-row frontier, and a plain
-    Window.partitionBy(host) puts all of it in ONE task. With salting the
-    exact same admitted set is computed in two phases:
-      1. rank within (host, salt) — salt = xxhash64(url) % n_salts spreads
-         a hot host over n_salts tasks; keep rank ≤ budget. Any row
-         outside its salt-local top-budget cannot be in the host-global
-         top-budget (each salt keeps a superset of its contribution).
-      2. exact rank on the survivors — now ≤ budget × n_salts rows per
-         host, bounded regardless of frontier skew.
-
-    MEASURED (round 5, BENCH/skew_admission_ab_r05*.json): on Spark ≥3.5
-    the default n_salts=None path is ALREADY two-phase skew-safe — the
-    `row_number() <= budget` filter compiles to a partial
+    Skew: a Zipf-hot host can hold a large fraction of a 10^10-row
+    frontier, yet the plain host window stays skew-safe on Spark ≥3.5 —
+    the `row_number() <= budget` filter compiles to a partial
     WindowGroupLimit BEFORE the host shuffle (map-side per-host top-k,
     plan-asserted in tests/test_plans.py), so a hot host contributes at
-    most budget × map_partitions rows to its reducer regardless of how
-    much of the frontier it owns. A/B on a frontier where one host held
-    50-67% of 8-48M pending rows: identical admitted sets (bidirectional
-    exceptAll = 0), and plain admission matched or beat the explicit
-    salted plan at every scale (the salted path pays a second full
-    shuffle+rank pass over the cold hosts). Keep n_salts for engines
-    without the WindowGroupLimit rule (Spark < 3.5); on this engine the
-    None default is the measured right answer.
+    most budget × map_partitions rows to its reducer. An explicit
+    (host, salt) two-phase rank admitted the identical set and never won
+    at 8-48M rows (BENCH/BASELINE.md §2q).
     """
-    if n_salts is not None and n_salts > 1:
-        salt_w = Window.partitionBy("host", "__salt").orderBy(
-            F.col("depth").asc(), F.col("discovery_iter").asc(),
-            F.col("score").desc(), F.col("url").asc(),
-        )
-        budget_cap = per_host_budget
-        frontier = (
-            frontier.withColumn(
-                "__salt", F.pmod(F.xxhash64("url"), F.lit(n_salts))
-            )
-            .withColumn("__srn", F.row_number().over(salt_w))
-            .filter(F.col("__srn") <= budget_cap)
-            .drop("__salt", "__srn")
-        )
     ranked = frontier.withColumn("rn", F.row_number().over(priority_window()))
     if delay_window_ms is not None and "crawl_delay_ms" in frontier.columns:
         budget = F.when(

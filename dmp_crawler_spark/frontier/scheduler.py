@@ -41,21 +41,17 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dmp_crawler_spark.extractors.udfs import extract_and_links
+from dmp_crawler_spark.extractors.udfs import _decode, fetch_extract_pass
 from dmp_crawler_spark.frontier import (
     bloom,
     politeness,
     robots as robots_mod,
     statelog,
 )
-from dmp_crawler_spark.frontier.urlnorm import (
-    normalize_url,
-    resolve_link,
-    with_url_cols,
-)
+from dmp_crawler_spark.frontier.urlnorm import normalize_url, with_url_cols
 from dmp_crawler_spark.functions.strings import expand_seed_template
 
 # F1 extension blacklist (shouldVisit, …/crawler/auto/Crawler4Autohome.java:53-54)
@@ -85,6 +81,13 @@ SEEN_SCHEMA = (
     "scheduled_iter int, shard int"
 )
 
+# results_df's read of the combined/iter=*/kind=* spill (iter and kind are
+# directory partitions)
+RESULTS_SCHEMA = (
+    "url string, rowkey string, family string, cols map<string,string>, "
+    "kind string, iter int"
+)
+
 
 class EnrichmentSpec:
     """J4 as a crawl stage: per-entity secondary API fetch merged into the
@@ -112,18 +115,23 @@ class EnrichmentSpec:
 
 
 class CorpusFetcher:
-    """Simulated HTTP: the 'web' is the pages corpus table. fetch(admitted)
-    joins on url; misses are fetch failures (S3 retry path). In production
-    this class is replaced by an Arrow-batched HTTP pandas UDF with bounded
-    retry — same output contract."""
+    """Simulated HTTP: the 'web' is the pages corpus table.
+    fetch_extract(admitted) inner-joins it on url and runs the shared
+    fetch+extract pass over the joined html; an admitted URL with no page
+    row is a fetch failure (S3 retry path). In production the join is
+    replaced by an HTTP GET inside page_of — same output contract."""
 
     def __init__(self, spark: SparkSession, pages_path: str):
-        self.pages = spark.read.parquet(pages_path)
+        self.pages = spark.read.parquet(pages_path).select(
+            "url", "html", "lang", "text"
+        )
 
-    def fetch(self, admitted: DataFrame) -> tuple[DataFrame, DataFrame]:
-        fetched = admitted.join(self.pages, "url", "inner")
-        missed = admitted.join(self.pages.select("url"), "url", "left_anti")
-        return fetched, missed
+    def fetch_extract(self, admitted: DataFrame) -> DataFrame:
+        return fetch_extract_pass(
+            admitted.join(self.pages, "url"),
+            admitted.columns,
+            lambda row: (_decode(row["html"]), row["lang"], row["text"]),
+        )
 
 
 class CrawlEngine:
@@ -139,9 +147,7 @@ class CrawlEngine:
         global_budget: int | None = None,
         max_retries: int = 3,
         n_bloom_shards: int = 16,
-        use_bloom: bool = True,
         bloom_expected_per_shard: int = 1 << 16,
-        admit_salts: int | None = None,
         enrichment: EnrichmentSpec | None = None,
         compact_seen_every: int = 8,
         compact_frontier_every: int = 8,
@@ -161,11 +167,7 @@ class CrawlEngine:
         self.global_budget = global_budget
         self.max_retries = max_retries
         self.n_bloom_shards = n_bloom_shards
-        self.use_bloom = use_bloom
         self.bloom_expected_per_shard = bloom_expected_per_shard
-        # salted hot-host admission (north rule): spread a Zipf-hot host's
-        # frontier slice over admit_salts tasks before the exact rank
-        self.admit_salts = admit_salts
         # fold the per-iteration seen tail into one shard-partitioned
         # baseline every N iterations so the anti-join plan reads a bounded
         # dir list (≤ N+1) instead of one dir per iteration ever crawled;
@@ -184,9 +186,8 @@ class CrawlEngine:
         # LSM only pays once the pending set dwarfs the per-iteration
         # delta AND the O(pending) fold write outweighs the log's fixed
         # overhead (~3 s/iteration of view anti-join + log jobs on this
-        # box — scripts/profile_lsm.py). Measured fold-write slope is
-        # ~0.1 s per million pending rows here
-        # (scripts/profile_frontier_write.py), putting the local
+        # box). Measured fold-write slope is ~0.1 s per million pending
+        # rows here (both probes: BENCH/BASELINE.md §2d), putting the local
         # crossover at tens of millions of rows; on replicated DFS the
         # per-row write cost is several × higher, so the default sits
         # below the local crossover. Below the gate the engine folds
@@ -403,7 +404,7 @@ class CrawlEngine:
         n_seeds = sum(frontier_shards.values())
         self._write_seen(fr_w, 0)
         manifest = None
-        if self.use_bloom and n_seeds >= self.bloom_min_seen:
+        if n_seeds >= self.bloom_min_seen:
             manifest = bloom.merge_shards(
                 self.spark.read.schema(SEEN_SCHEMA).parquet(
                     self._p("seen", "iter=000000")
@@ -478,7 +479,6 @@ class CrawlEngine:
         )
         admitted = politeness.admit(
             eligible, self.per_host_budget, global_budget=remaining,
-            n_salts=self.admit_salts,
         ).select(*FRONTIER_COLS).cache()
         n_admitted = admitted.count()
         _mark("admit")
@@ -489,57 +489,39 @@ class CrawlEngine:
             self._commit({**ck, "iter": k, "metrics": metrics})
             return metrics
 
-        fused = hasattr(self.fetcher, "fetch_extract")
-        if fused:
-            # ONE Python pass: fetch + extract + link discovery together;
-            # html never crosses the Arrow boundary (see GeneratorFetcher).
-            # The pass is spilled to parquet partitioned by `kind` instead
-            # of a JVM cache: page/result/link consumers then do pruned
-            # column scans (kind is a directory partition), and the engine
-            # never holds millions of extraction rows on-heap.
-            cdir = self._p("combined", f"iter={k:06d}")
-            # zstd, not snappy: kind=page (the text landing) is ~97% of the
-            # spill's bytes and the single biggest I/O in the loop — zstd
-            # cuts it ~35% for sub-ms/page extra CPU, and the writeback of
-            # this dir is what stalls the NEXT phase's writes on one disk
-            self.fetcher.fetch_extract(admitted).write.mode(
-                "overwrite"
-            ).option("compression", "zstd").partitionBy("kind").parquet(cdir)
-            combined = self.spark.read.parquet(cdir)
-            fetched = combined.filter(F.col("kind") == "page")
-            missed = admitted.join(fetched.select("url"), "url", "left_anti")
-            if self.enrichment:
-                # second fetch pass(es) keyed by the pass-1 entity id; the
-                # enriched copy lands in results/iter=k, which results_df
-                # prefers over this iteration's combined slice
-                enriched = combined.filter(F.col("kind") == "result").select(
-                    "url", "rowkey", "family", "cols"
-                )
-                for spec in self.enrichment:
-                    enriched = self._enrich(enriched, spec)
-                enriched.write.mode("overwrite").parquet(
-                    self._p("results", f"iter={k:06d}")
-                )
-            _mark("fetch_extract_results")
-        else:
-            fetched_raw, missed = self.fetcher.fetch(admitted)
-            # Observation: fetched-count rides along with the first action
-            # over `fetched` — no separate count job.
-            obs_fetched = Observation()
-            fetched = fetched_raw.observe(
-                obs_fetched, F.count(F.lit(1)).alias("n_fetched")
-            ).cache()
-            # ONE Python pass over html: extraction rows + link rows together
-            combined = extract_and_links(fetched).cache()
-            results = combined.filter(F.col("kind") == "result").select(
+        # ONE Python pass: fetch + extract + link discovery together; html
+        # never crosses the Arrow boundary (udfs.fetch_extract_pass). The
+        # pass is spilled to parquet partitioned by `kind` instead of a JVM
+        # cache: page/result/link consumers then do pruned column scans
+        # (kind is a directory partition), and the engine never holds
+        # millions of extraction rows on-heap.
+        cdir = self._p("combined", f"iter={k:06d}")
+        out = self.fetcher.fetch_extract(admitted)
+        # zstd, not snappy: kind=page (the text landing) is ~97% of the
+        # spill's bytes and the single biggest I/O in the loop — zstd cuts
+        # it ~35% for sub-ms/page extra CPU, and the writeback of this dir
+        # is what stalls the NEXT phase's writes on one disk
+        out.write.mode("overwrite").option("compression", "zstd").partitionBy(
+            "kind"
+        ).parquet(cdir)
+        # explicit schema: an iteration where every admitted URL misses
+        # writes no kind= dirs, which schema inference cannot read
+        combined = self.spark.read.schema(out.schema).parquet(cdir)
+        fetched = combined.filter(F.col("kind") == "page")
+        missed = admitted.join(fetched.select("url"), "url", "left_anti")
+        if self.enrichment:
+            # second fetch pass(es) keyed by the pass-1 entity id; the
+            # enriched copy lands in results/iter=k, which results_df
+            # prefers over this iteration's combined slice
+            enriched = combined.filter(F.col("kind") == "result").select(
                 "url", "rowkey", "family", "cols"
             )
             for spec in self.enrichment:
-                results = self._enrich(results, spec)
-            results.write.mode("overwrite").parquet(
+                enriched = self._enrich(enriched, spec)
+            enriched.write.mode("overwrite").parquet(
                 self._p("results", f"iter={k:06d}")
             )
-            _mark("fetch_extract_results")
+        _mark("fetch_extract_results")
         (
             fetched.select(
                 "url", "host", "host_hash", "depth", "discovery_iter", "score",
@@ -550,10 +532,7 @@ class CrawlEngine:
         )
         _mark("crawled_write")
 
-        if fused:
-            n_fetched = fetched.count()  # pruned count over kind=page files
-        else:
-            n_fetched = int(obs_fetched.get["n_fetched"])
+        n_fetched = fetched.count()  # pruned count over kind=page files
         n_missed = n_admitted - n_fetched
 
         # retry / failed split (Q5/Q6, …/crawler/SimpleWebCrawler.java:14,73-78)
@@ -572,45 +551,19 @@ class CrawlEngine:
             ).write.mode("overwrite").parquet(self._p("failed", f"iter={k:06d}"))
         _mark("failed_write")
 
-        # link discovery → normalize → should_visit gate → score (F1/F2)
-        # dedup links BEFORE the rules join: raw links are ~40×/page, the
-        # rules join is a nested-loop regex match — running it on the unique
-        # URL set instead of every (src,out) edge cuts regex evals ~an order
-        # of magnitude at scale.
-        if fused:
-            # fused link rows already carry the parent depth (partial
-            # combine done map-side in the fetch worker) — no join needed.
-            # Fetchers with links_normalized=True emit out_url already
-            # resolved + normalized (py_normalize_url parity contract), so
-            # the resolve+normalize regex stack is skipped on the full
-            # link volume — it would otherwise run ~10 regexes per link
-            # row before the dedup shuffle.
-            link_rows = combined.filter(F.col("kind") == "link")
-            if getattr(self.fetcher, "links_normalized", False):
-                out = F.col("out_url")
-            else:
-                out = normalize_url(resolve_link("url", "out_url"))
-            uniq_links = (
-                link_rows
-                .select(out.alias("url"), F.col("depth").alias("parent_depth"))
-                .filter(~F.col("url").rlike(EXT_BLACKLIST))
-                .groupBy("url")
-                .agg(F.min("parent_depth").alias("parent_depth"))
-            )
-        else:
-            links = combined.filter(F.col("kind") == "link").select(
-                F.col("url").alias("src_url"),
-                normalize_url(resolve_link("url", "out_url")).alias("url"),
-            )
-            parent_depth = fetched.select(
-                F.col("url").alias("src_url"), F.col("depth").alias("parent_depth")
-            )
-            uniq_links = (
-                links.filter(~F.col("url").rlike(EXT_BLACKLIST))
-                .join(parent_depth, "src_url")
-                .groupBy("url")
-                .agg(F.min("parent_depth").alias("parent_depth"))
-            )
+        # link discovery → should_visit gate → score (F1/F2). Link rows
+        # arrive resolved, normalized, one per (partition, out_url) and
+        # already carrying the parent depth (the pass's map-side combine);
+        # dedup them BEFORE the rule chain so the regex evals run on the
+        # unique URL set, not every (src, out) edge.
+        uniq_links = (
+            combined.filter(F.col("kind") == "link")
+            .select(F.col("out_url").alias("url"),
+                    F.col("depth").alias("parent_depth"))
+            .filter(~F.col("url").rlike(EXT_BLACKLIST))
+            .groupBy("url")
+            .agg(F.min("parent_depth").alias("parent_depth"))
+        )
         candidates = (
             uniq_links
             .withColumn("score", self.rule_score())
@@ -761,11 +714,7 @@ class CrawlEngine:
         # to the O(new) incremental merge.
         manifest = ck.get("bloom_manifest")
         bloom_expected = ck.get("bloom_expected", self.bloom_expected_per_shard)
-        if (
-            self.use_bloom
-            and manifest is None
-            and ck.get("seen_total", 0) >= self.bloom_min_seen
-        ):
+        if manifest is None and ck.get("seen_total", 0) >= self.bloom_min_seen:
             target = max(1, 2 * ck["seen_total"] // self.n_bloom_shards)
             while bloom_expected < target:
                 bloom_expected *= 2
@@ -776,7 +725,7 @@ class CrawlEngine:
                 expected_per_shard=bloom_expected,
             )
             _mark("bloom_build")
-        elif self.use_bloom and manifest is not None:
+        elif manifest is not None:
             manifest = bloom.merge_shards(
                 self.spark.read.schema(SEEN_SCHEMA).parquet(
                     self._p("seen", f"iter={k:06d}")
@@ -917,10 +866,8 @@ class CrawlEngine:
             "metrics": metrics,
         })
         admitted.unpersist()
-        fetched.unpersist()
         if n_missed > 0:
             missed.unpersist()
-        combined.unpersist()
         return metrics
 
     def run(self, max_iters: int = 100) -> list[dict]:
@@ -982,9 +929,10 @@ class CrawlEngine:
                 if n.startswith("iter=")
             }
         if os.path.exists(self._p("combined")):
-            combined = self.spark.read.parquet(self._p("combined")).filter(
-                F.col("kind") == "result"
-            )
+            # explicit schema: an all-miss iteration's dir holds no files
+            combined = self.spark.read.schema(RESULTS_SCHEMA).parquet(
+                self._p("combined")
+            ).filter(F.col("kind") == "result")
             if done_iters:
                 # an iteration with a results/ dir (the enriched copy) must
                 # not be double-counted from its combined slice; the filter

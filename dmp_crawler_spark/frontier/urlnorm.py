@@ -108,10 +108,10 @@ _PY_P443 = _re.compile(r"^(https://[^/:]+):443(?=/|\?|$)")
 
 
 def py_normalize_url(url: str) -> str:
-    """Pure-Python replica of normalize_url, for fetch workers that emit
-    pre-normalized links (GeneratorFetcher's links_normalized contract) so
-    the scheduler's link pipeline can skip the resolve+normalize regex
-    stack on the full link volume. Byte-identical to the Column version
+    """Pure-Python replica of normalize_url, for the fused fetch+extract
+    pass (extractors/udfs.fetch_extract_pass), which emits link rows
+    already normalized so the scheduler's link pipeline runs no
+    resolve+normalize regex stack on the full link volume. Byte-identical to the Column version
     on scheme-ful URLs without embedded newlines (property-tested in
     tests/test_frontier.py); a newline inside a URL would diverge (Java
     `.` / `$` are line-aware) but the href scanner never emits one."""

@@ -169,9 +169,9 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
     """REAL (non-stub) audio decode for the second codec this environment
     can carry without external libs: RIFF/WAVE uncompressed PCM
     (audio_format=1), 8- or 16-bit, any channel count. Walks the chunk
-    list (word-aligned sizes, unknown chunks skipped), requires fmt AND
-    data, and raises ValueError on anything it does not fully understand
-    — no silent wrong samples. Returns ((n_frames, n_channels) int32
+    list (word-aligned sizes, unknown chunks skipped), requires exactly
+    one fmt and one data chunk, and raises ValueError on anything it does
+    not fully understand — no silent wrong samples. Returns ((n_frames, n_channels) int32
     samples, sample_rate, bits); 8-bit unsigned is centered to signed
     (v - 128) so both widths mean the same thing downstream."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
@@ -184,6 +184,8 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
         if body_off + size > len(payload):
             raise ValueError(f"truncated chunk {cid!r}: need {size} bytes")
         if cid == b"fmt ":
+            if fmt is not None:
+                raise ValueError("duplicate fmt chunk")
             if size < 16:
                 raise ValueError(f"fmt chunk too small: {size}")
             afmt, nch, sr, _br, _ba, bits = struct.unpack_from(
@@ -195,6 +197,8 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
                 )
             fmt = (nch, sr, bits)
         elif cid == b"data":
+            if data is not None:
+                raise ValueError("duplicate data chunk")
             data = payload[body_off:body_off + size]
         pos = body_off + size + (size & 1)
     if fmt is None or data is None:

@@ -33,8 +33,6 @@ def main() -> None:
     ap.add_argument("--robots", action="store_true")
     ap.add_argument("--gen-fetch", action="store_true",
                     help="fused GeneratorFetcher (per-URL fetch cost, no corpus scan)")
-    ap.add_argument("--admit-salts", type=int, default=None,
-                    help="salted hot-host admission (north-rule skew path)")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -86,7 +84,6 @@ def main() -> None:
         per_host_budget=args.per_host_budget,
         global_budget=args.global_budget,
         n_bloom_shards=args.bloom_shards,
-        admit_salts=args.admit_salts,
     )
     t0 = time.monotonic()
     if eng.last_checkpoint() is None:

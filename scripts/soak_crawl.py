@@ -69,7 +69,6 @@ OUT_NAME = os.environ.get("SOAK_OUT", "soak_20iter.json")
 STATE_DIR = os.environ.get("SOAK_STATE")  # None = fresh tempdir
 RESUME = os.environ.get("SOAK_RESUME", "0") == "1"
 PRUNE = os.environ.get("SOAK_PRUNE", "0") == "1"
-SALTS = os.environ.get("SOAK_SALTS")  # hot-host salted admission; None = off
 
 
 def main() -> None:
@@ -92,7 +91,6 @@ def main() -> None:
         generator.GeneratorFetcher(spark, N_URLS),
         generator.generate_site_rules(spark),
         per_host_budget=BUDGET, global_budget=GLOBAL, n_bloom_shards=16,
-        admit_salts=int(SALTS) if SALTS else None,
         **kw,
     )
     resumed_from = None
@@ -179,8 +177,7 @@ def main() -> None:
                      "SOAK_BUDGET": BUDGET, "SOAK_GLOBAL": GLOBAL,
                      "SOAK_ITERS": ITERS, "SOAK_CPUS": CPUS,
                      "SOAK_LSM_GATE": LSM_GATE, "SOAK_STATE": STATE_DIR,
-                     "SOAK_RESUME": RESUME, "SOAK_PRUNE": PRUNE,
-                     "SOAK_SALTS": SALTS},
+                     "SOAK_RESUME": RESUME, "SOAK_PRUNE": PRUNE},
         "resumed_from_iter": resumed_from,
         "modes": {m: sum(1 for it in iters if it["mode"] == m)
                   for m in ("fold", "lsm")},

@@ -67,7 +67,7 @@ def test_admission_plan_has_partial_window_group_limit(spark):
     map-side per-host top-k — so a Zipf-hot host contributes at most
     budget × map_partitions rows to its reducer. If this node disappears
     (conf change, Spark regression), hot-host admission silently becomes
-    one-task-bound and the salted fallback (admit n_salts) is needed."""
+    one-task-bound."""
     from dmp_crawler_spark.frontier import politeness
 
     fr = spark.createDataFrame(

@@ -77,6 +77,15 @@ def test_decode_wav_rejects_malformed():
     payload2 = b"RIFF" + struct.pack("<I", 4 + len(body2)) + b"WAVE" + body2
     with pytest.raises(ValueError, match="missing fmt or data"):
         multimodal.decode_wav(payload2)
+    # a second fmt or data chunk is ambiguous (which one wins?) — reject
+    fmt_chunk = body2
+    data_chunk = b"data" + struct.pack("<I", 4) + b"\x00" * 4
+    for body3, which in ((fmt_chunk + fmt_chunk + data_chunk, "fmt"),
+                         (fmt_chunk + data_chunk + data_chunk, "data"),
+                         (fmt_chunk + data_chunk + fmt_chunk, "fmt")):
+        payload3 = b"RIFF" + struct.pack("<I", 4 + len(body3)) + b"WAVE" + body3
+        with pytest.raises(ValueError, match=f"duplicate {which} chunk"):
+            multimodal.decode_wav(payload3)
 
 
 def test_wav_strict_features_match_formula(spark):
