@@ -53,9 +53,10 @@ Operator ↔ query map (SURVEY.md §2 ids in names):
   pii_scrub_clean     typed PII redaction (email/IPv4/phone) + counts
   corpus_clean_v2     7-stage composed pipeline (line dedup → PII →
                       repetition → quality/lang → exact → near-dup)
-Rows-only (non-SQL-expressible): crawl_engine_smoke (iterative, stateful,
-  checkpointed) — every other queries() entry has a full DuckDB oracle,
-  including the crawl loop itself via crawl_bfs_oracle.
+Every queries() entry has a full DuckDB oracle, including the crawl loop
+itself via crawl_bfs_oracle. The text scores (lang_id, quality_score,
+token_counts, dedup_exact_norm) and the composed pipelines call the
+library's functions.textstats operators; no wrapper re-implements one.
 See COVERAGE.md for the full SURVEY §2 row -> query/test mapping.
 """
 
@@ -72,9 +73,6 @@ from dmp_crawler_spark.functions import strings as S
 from dmp_crawler_spark.functions import textstats as TS
 
 EXT_BLACKLIST = r"(?i)\.(css|js|gif|jpe?g|png|mp3|mp4|zip|gz|ico)$"
-
-_STOP = "the|a|an|and|or|of|to|in|is|are|was|were|it|that|this|for|on|with|as|by|at|be"
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -396,65 +394,55 @@ def a4_map_assembly(spark, d):
 # text analysis (documents)
 
 
-def _lang_pred_expr(c):
-    """n-gram-heuristic language label over a text Column (shared by
-    lang_id and corpus_clean so the composed pipeline reuses the exact
-    oracle-green expression)."""
-    ln = F.length(c)
-    cjk = ln - F.length(F.regexp_replace(c, "[一-鿿]", ""))
-    latin = ln - F.length(F.regexp_replace(c, "[A-Za-z]", ""))
-    return (
-        F.when((ln > 0) & (cjk / ln > 0.25), F.lit("zh"))
-        .when((ln > 0) & (latin / ln > 0.4), F.lit("en"))
-        .otherwise(F.lit("und"))
-    )
-
-
 def lang_id(spark, d):
     docs = _t(spark, d, "documents")
     return docs.select(
-        "doc_id", "lang", _lang_pred_expr(F.col("text")).alias("lang_pred")
+        "doc_id", "lang", TS.detect_lang("text").alias("lang_pred")
     )
 
 
 def token_counts(spark, d):
     docs = _t(spark, d, "documents")
-    t = F.trim(F.col("text"))
-    ws = F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-    bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(TS.TOKEN_REGEX), F.lit(0)))
-    return docs.select("doc_id", ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
-
-
-def _quality_expr(c):
-    """4-gate heuristic quality score over a text Column (shared by
-    quality_score and corpus_clean)."""
-    ln = F.length(c)
-    punct = ln - F.length(F.regexp_replace(c, r"[\p{P}\p{S}]", ""))
-    t = F.trim(c)
-    toks = F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-    nonspace = F.length(F.regexp_replace(c, r"\s", ""))
-    mwl = F.when(toks > 0, nonspace / toks).otherwise(F.lit(0.0))
-    sw = F.size(
-        F.regexp_extract_all(F.lower(c), F.lit(r"\b(" + _STOP + r")\b"), F.lit(0))
+    return docs.select(
+        "doc_id",
+        TS.ws_token_count("text").alias("ws_tokens"),
+        TS.bpe_token_count("text").alias("bpe_tokens"),
     )
-    swr = F.when(toks > 0, sw / toks).otherwise(F.lit(0.0))
-    cjk = ln - F.length(F.regexp_replace(c, "[一-鿿]", ""))
-    length_ok = F.when((ln >= 50) & (ln <= 100000), 1.0).otherwise(0.0)
-    punct_ok = F.when((ln > 0) & (punct / ln < 0.3), 1.0).otherwise(0.0)
-    word_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), 1.0).otherwise(0.0)
-    sw_ok = F.when((swr > 0.05) | ((ln > 0) & (cjk / ln > 0.25)), 1.0).otherwise(0.0)
-    return F.round((length_ok + punct_ok + word_ok + sw_ok) / 4.0, 4)
 
 
 def quality_score(spark, d):
     docs = _t(spark, d, "documents")
-    return docs.select("doc_id", _quality_expr(F.col("text")).alias("quality"))
+    return docs.select("doc_id", TS.quality_score("text").alias("quality"))
 
 
 # ---------------------------------------------------------------------------
 # training-data assembly (operators/training.py): the post-curation last
 # mile — benchmark decontamination, deterministic domain mixing, and
 # concat-and-chunk sequence packing
+
+
+def _heldout(docs):
+    """The held-out benchmark slice: doc_id % 97 == 0 (planted verbatim
+    contamination by construction)."""
+    return docs.filter(F.col("doc_id") % 97 == 0)
+
+
+def _mix_weights(docs):
+    """Per-source mixing rates (source, rate_bp) derived from md5(source),
+    so all four regimes appear: drop / 0.875 / 1.75 / 2.625 epochs."""
+    return (
+        docs.select("source")
+        .distinct()
+        .withColumn(
+            "rate_bp",
+            (
+                F.conv(F.substring(F.md5(F.col("source").cast("binary")), 1, 4), 16, 10)
+                .cast("long")
+                % 4
+            )
+            * 8750,
+        )
+    )
 
 
 def decontaminate_bench(spark, d):
@@ -471,8 +459,7 @@ def decontaminate_bench(spark, d):
     docs = dd._widen_scan(
         _t(spark, d, "documents").select("doc_id", "text")
     )
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return TR.decontaminate(docs, bench, n=8, frac_threshold=0.5)
+    return TR.decontaminate(docs, _heldout(docs), n=8, frac_threshold=0.5)
 
 
 def domain_mix_audit(spark, d):
@@ -485,20 +472,7 @@ def domain_mix_audit(spark, d):
     from dmp_crawler_spark.operators import training as TR
 
     docs = _t(spark, d, "documents")
-    weights = (
-        docs.select("source")
-        .distinct()
-        .withColumn(
-            "rate_bp",
-            (
-                F.conv(F.substring(F.md5(F.col("source").cast("binary")), 1, 4), 16, 10)
-                .cast("long")
-                % 4
-            )
-            * 8750,
-        )
-    )
-    return TR.domain_mix_summary(docs, weights)
+    return TR.domain_mix_summary(docs, _mix_weights(docs))
 
 
 def pack_sequences_q(spark, d):
@@ -509,7 +483,11 @@ def pack_sequences_q(spark, d):
     sort anywhere in the plan."""
     from dmp_crawler_spark.operators import training as TR
 
-    docs = _t(spark, d, "documents")
+    docs = _t(spark, d, "documents").select(
+        "doc_id",
+        F.col("source").alias("shard"),
+        TS.ws_token_count("text").cast("long").alias("n_tokens"),
+    )
     return TR.pack_sequences(docs, capacity=2048)
 
 
@@ -557,10 +535,11 @@ def assemble_training(spark, d):
     docs = dd._widen_scan(
         _t(spark, d, "documents").select("doc_id", "source", "text")
     )
-    bench = docs.select("doc_id", "text").filter(F.col("doc_id") % 97 == 0)
     flagged = (
         TR.decontaminate(
-            docs.select("doc_id", "text"), bench, n=8, frac_threshold=0.5
+            docs.select("doc_id", "text"),
+            _heldout(docs.select("doc_id", "text")),
+            n=8, frac_threshold=0.5,
         )
         .filter(F.col("contaminated") == 1)
         .select("doc_id")
@@ -569,22 +548,7 @@ def assemble_training(spark, d):
         "doc_id", "source",
         TS.ws_token_count("text").cast("long").alias("n_tokens"),
     )
-    weights = (
-        docs.select("source")
-        .distinct()
-        .withColumn(
-            "rate_bp",
-            (
-                F.conv(
-                    F.substring(F.md5(F.col("source").cast("binary")), 1, 4),
-                    16, 10,
-                ).cast("long")
-                % 4
-            )
-            * 8750,
-        )
-    )
-    mixed = TR.domain_mix(clean, weights).withColumn(
+    mixed = TR.domain_mix(clean, _mix_weights(docs)).withColumn(
         "mix_id",
         F.concat(
             F.col("doc_id").cast("string"), F.lit("#"),
@@ -592,40 +556,23 @@ def assemble_training(spark, d):
         ),
     )
     shuffled = TR.shuffle_shards(mixed, n_shards=8, seed=7, id_col="mix_id")
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    off = shuffled.withColumn(
-        "start_off", F.sum("n_tokens").over(w) - F.col("n_tokens")
-    )
-    cap = 1024
-    last_tok = F.col("start_off") + F.greatest(F.col("n_tokens"), F.lit(1)) - 1
-    return off.select(
+    packed = TR.pack_sequences(shuffled, capacity=1024, order_col="pos")
+    return packed.select(
         "doc_id",
         F.col("epoch").cast("long").alias("epoch"),
         F.col("shard").cast("long").alias("shard"),
         F.col("pos").cast("long").alias("pos"),
         "n_tokens",
         "start_off",
-        F.floor(F.col("start_off") / cap).alias("first_seq"),
-        F.floor(last_tok / cap).alias("last_seq"),
-    )
-
-
-def _norm_text_expr(c):
-    """Punct-stripped, whitespace-collapsed, lowercased text for exact
-    dedup (shared by dedup_exact_norm and corpus_clean)."""
-    return F.trim(
-        F.regexp_replace(F.regexp_replace(F.lower(c), r"[\p{P}]", ""), r"\s+", " ")
+        "first_seq",
+        "last_seq",
     )
 
 
 def dedup_exact_norm(spark, d):
     docs = _t(spark, d, "documents")
     return (
-        docs.select("doc_id", _norm_text_expr(F.col("text")).alias("norm"))
+        docs.select("doc_id", TS.norm_text("text").alias("norm"))
         .groupBy("norm")
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
         .select("keep_id", "n_dups")
@@ -658,8 +605,6 @@ def corpus_clean(spark, d):
     persist becomes a parquet materialization of the scored corpus — still
     the right plan: every stage after the scan reads the 4-column scored
     projection, not the raw corpus."""
-    from pyspark import StorageLevel
-
     from dmp_crawler_spark.operators import dedup as dd
 
     # the sf documents table is a single parquet split at bench scale —
@@ -669,17 +614,35 @@ def corpus_clean(spark, d):
     docs = dd._widen_scan(
         _t(spark, d, "documents").select("doc_id", "text")
     )
+    return _gate_and_dedup(_scored(docs))
+
+
+def _scored(docs):
+    """The persisted scored projection (doc_id, text, quality, lang_pred,
+    norm) both cleaning pipelines gate and dedup on."""
+    from pyspark import StorageLevel
+
     c = F.col("text")
-    scored = docs.select(
+    return docs.select(
         "doc_id",
         "text",
-        _quality_expr(c).alias("quality"),
-        _lang_pred_expr(c).alias("lang_pred"),
-        _norm_text_expr(c).alias("norm"),
+        TS.quality_score(c).alias("quality"),
+        TS.detect_lang(c).alias("lang_pred"),
+        TS.norm_text(c).alias("norm"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    gated = scored.filter(
-        (F.col("quality") >= 0.75) & (F.col("lang_pred") != "und")
-    )
+
+
+def _gate_and_dedup(scored, *extra_gates):
+    """The shared cleaning tail: quality ≥ 0.75 and lang_pred ≠ 'und' (plus
+    any extra gates), then normalized exact dedup keeping the min doc_id
+    per norm group, then MinHash-LSH near-dup suppression keeping each
+    cluster's representative → (doc_id, quality, lang_pred)."""
+    from dmp_crawler_spark.operators import dedup as dd
+
+    gate = (F.col("quality") >= 0.75) & (F.col("lang_pred") != "und")
+    for g in extra_gates:
+        gate = gate & g
+    gated = scored.filter(gate)
     exact_keep = (
         gated.groupBy("norm").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     )
@@ -691,6 +654,31 @@ def corpus_clean(spark, d):
     dupes = clusters.filter(F.col("cluster_id") != F.col("doc_id")).select("doc_id")
     kept = survivors.join(dupes, "doc_id", "left_anti")
     return kept.select("doc_id", "quality", "lang_pred")
+
+
+def _planted_pii(did):
+    """Deterministic PII planted from doc_id (the corpus has none): an
+    email on every 3rd doc, an IPv4 on every 4th."""
+    s = lambda c: c.cast("string")  # noqa: E731
+    return [
+        F.when(did % 3 == 0, F.concat(
+            F.lit(" contact user"), s(did),
+            F.lit("@example"), s(did % 7), F.lit(".com"),
+        )).otherwise(F.lit("")),
+        F.when(did % 4 == 0, F.concat(
+            F.lit(" from 10."), s(did % 256),
+            F.lit("."), s((did * 3) % 256), F.lit(".7"),
+        )).otherwise(F.lit("")),
+    ]
+
+
+def _three_token_lines(docs):
+    """Simulated line structure for the single-line corpus: every third
+    inter-word space becomes a newline."""
+    return docs.select(
+        "doc_id",
+        F.regexp_replace("text", r"((?:\S+ ){2}\S+) ", "$1\n").alias("text"),
+    )
 
 
 def corpus_clean_v2(spark, d):
@@ -717,77 +705,32 @@ def corpus_clean_v2(spark, d):
     from dmp_crawler_spark.operators import dedup as dd
 
     docs = dd._widen_scan(_t(spark, d, "documents").select("doc_id", "text"))
-    did = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
     planted = docs.select(
         "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(did % 3 == 0, F.concat(
-                F.lit(" contact user"), s(did),
-                F.lit("@example"), s(did % 7), F.lit(".com"),
-            )).otherwise(F.lit("")),
-            F.when(did % 4 == 0, F.concat(
-                F.lit(" from 10."), s(did % 256),
-                F.lit("."), s((did * 3) % 256), F.lit(".7"),
-            )).otherwise(F.lit("")),
-        ).alias("text"),
+        F.concat(F.col("text"), *_planted_pii(F.col("doc_id"))).alias("text"),
     )
-    lined = planted.select(
-        "doc_id",
-        F.regexp_replace("text", r"((?:\S+ ){2}\S+) ", "$1\n").alias("text"),
-    )
-    ld = dd.line_dedup(lined, max_doc_freq=2).select(
+    ld = dd.line_dedup(_three_token_lines(planted), max_doc_freq=2).select(
         "doc_id", F.col("clean_text").alias("text")
     )
     scrubbed = TS.pii_scrub(ld).select(
         "doc_id", F.col("clean_text").alias("text")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    c = F.col("text")
-    scored = scrubbed.select(
-        "doc_id",
-        "text",
-        _quality_expr(c).alias("quality"),
-        _lang_pred_expr(c).alias("lang_pred"),
-        _norm_text_expr(c).alias("norm"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     rep = TS.repetition_stats(scrubbed)
-    gated = (
-        scored.join(rep.select("doc_id", "dup_line_frac", "top_bigram_frac"),
-                    "doc_id")
-        .filter(
-            (F.col("quality") >= 0.75)
-            & (F.col("lang_pred") != "und")
-            & (F.col("top_bigram_frac") <= 0.10)
-            & (F.col("dup_line_frac") <= 0.30)
-        )
+    return _gate_and_dedup(
+        _scored(scrubbed).join(
+            rep.select("doc_id", "dup_line_frac", "top_bigram_frac"), "doc_id"
+        ),
+        F.col("top_bigram_frac") <= 0.10,
+        F.col("dup_line_frac") <= 0.30,
     )
-    exact_keep = (
-        gated.groupBy("norm").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    )
-    survivors = gated.join(exact_keep, "doc_id")
-    clusters = dd.near_dup_clusters(
-        survivors.select("doc_id", "text"),
-        threshold=0.5, num_hashes=16, bands=8, k_shingle=3,
-    )
-    dupes = clusters.filter(F.col("cluster_id") != F.col("doc_id")).select("doc_id")
-    kept = survivors.join(dupes, "doc_id", "left_anti")
-    return kept.select("doc_id", "quality", "lang_pred")
 
 
 # ---------------------------------------------------------------------------
 # similarity (embeddings)
 
 
-def _cos(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
 def ann_topk(spark, d):
-    from dmp_crawler_spark.operators.dedup import _widen_scan
+    from dmp_crawler_spark.operators.dedup import _widen_scan, cosine_sim
 
     # single-split fixture table: widen so the cosine stage is cluster-wide
     emb = _widen_scan(_t(spark, d, "embeddings")).withColumn(
@@ -797,7 +740,7 @@ def ann_topk(spark, d):
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
     scored = emb.crossJoin(F.broadcast(q)).select(
-        "query_id", "vec_id", F.round(_cos(F.col("vec"), F.col("qvec")), 6).alias("cosine")
+        "query_id", "vec_id", F.round(cosine_sim("vec", "qvec"), 6).alias("cosine")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 10)
@@ -1019,9 +962,6 @@ _S6_LINES = [
 # write-once memo for the s6 fixture file (one temp dir per process)
 _S6_FILE_MEMO: list = [None]
 
-# previous crawl_engine_smoke scratch dir (removed on the next invocation)
-_SMOKE_DIR_MEMO: list = [None]
-
 
 def s6_flat_file_scan(spark, d):
     """S6 flat-file scan: spark.read.text over a JS-array dictionary file,
@@ -1118,8 +1058,7 @@ def fingerprint_dedup(spark, d):
 
 # ---------------------------------------------------------------------------
 # LSH / similarity / multimodal operators (oracle-checked against exact
-# DuckDB replays) and the one iterative rows-only smoke (crawl_engine_smoke;
-# weixin_import_smoke gained a whole-pipeline oracle in round 3)
+# DuckDB replays)
 
 
 def minhash_pairs_q(spark, d):
@@ -1267,39 +1206,6 @@ def multimodal_features_q(spark, d):
     )
     media = mm.media_from_ids(ids)
     return mm.extract_features(media).select("media_id", "kind", "n_bytes")
-
-
-def crawl_engine_smoke(spark, d):
-    """End-to-end micro-crawl on a generated corpus: returns per-iteration
-    visit log. Non-SQL-expressible (iterative, stateful, checkpointed)."""
-    import shutil
-    import tempfile
-    from dmp_crawler_spark.corpus import generator
-    from dmp_crawler_spark.frontier.scheduler import CorpusFetcher, CrawlEngine
-
-    n = 150
-    # the engine state must survive until the caller collects the returned
-    # (lazy) DataFrame, so the dir from the PREVIOUS invocation is removed
-    # here instead — bounds the leak at one dir per process
-    if _SMOKE_DIR_MEMO[0] is not None:
-        shutil.rmtree(_SMOKE_DIR_MEMO[0], ignore_errors=True)
-    tmp = tempfile.mkdtemp(prefix="crawl_smoke_")
-    _SMOKE_DIR_MEMO[0] = tmp
-    corpus = f"{tmp}/pages"
-    generator.write_pages(spark, n, corpus, partitions=4)
-    from dmp_crawler_spark.corpus import templates
-    seeds = spark.createDataFrame(
-        [(templates.url_for(i * 17 % n, n), "") for i in range(4)],
-        "seed string, site string",
-    )
-    eng = CrawlEngine(
-        spark, f"{tmp}/state", CorpusFetcher(spark, corpus),
-        generator.generate_site_rules(spark),
-        per_host_budget=4, n_bloom_shards=8,
-    )
-    eng.init_from_seeds(seeds)
-    eng.run(max_iters=2)
-    return eng.crawled_df().select("url", "host", "depth", "crawl_iter")
 
 
 _BFS_DIR_MEMO: list = [None]
@@ -1558,11 +1464,7 @@ def line_dedup_clean(spark, d):
     from dmp_crawler_spark.operators import dedup as dd
 
     docs = dd._widen_scan(_t(spark, d, "documents").select("doc_id", "text"))
-    sim = docs.select(
-        "doc_id",
-        F.regexp_replace("text", r"((?:\S+ ){2}\S+) ", "$1\n").alias("text"),
-    )
-    return dd.line_dedup(sim, max_doc_freq=2)
+    return dd.line_dedup(_three_token_lines(docs), max_doc_freq=2)
 
 
 def pii_scrub_clean(spark, d):
@@ -1578,24 +1480,13 @@ def pii_scrub_clean(spark, d):
 
     docs = dd._widen_scan(_t(spark, d, "documents").select("doc_id", "text"))
     did = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
+    phone = F.when(did % 5 == 0, F.concat(
+        F.lit(" call 021-5"),
+        F.lpad((did % 1000).cast("string"), 3, "0"), F.lit("-0134"),
+    )).otherwise(F.lit(""))
     sim = docs.select(
         "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(did % 3 == 0, F.concat(
-                F.lit(" contact user"), s(did),
-                F.lit("@example"), s(did % 7), F.lit(".com"),
-            )).otherwise(F.lit("")),
-            F.when(did % 4 == 0, F.concat(
-                F.lit(" from 10."), s(did % 256),
-                F.lit("."), s((did * 3) % 256), F.lit(".7"),
-            )).otherwise(F.lit("")),
-            F.when(did % 5 == 0, F.concat(
-                F.lit(" call 021-5"),
-                F.lpad(s(did % 1000), 3, "0"), F.lit("-0134"),
-            )).otherwise(F.lit("")),
-        ).alias("text"),
+        F.concat(F.col("text"), *_planted_pii(did), phone).alias("text"),
     )
     return TS.pii_scrub(sim)
 
@@ -2039,9 +1930,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": pack_sequences_q,
         "unigram_ppl": unigram_ppl,
         "assemble_training": assemble_training,
-        # rows-only (iterative/stateful — no SQL oracle); the BFS oracle
-        # above covers the same loop with full hash evidence
-        "crawl_engine_smoke": crawl_engine_smoke,
         # --- single-green (first driver row in r04) ---
         "dedup_clusters": dedup_clusters_q,
         "multimodal_features": multimodal_features_q,
@@ -2831,10 +2719,10 @@ def oracle_sql() -> dict[str, str]:
             ),
             ro AS (
                 SELECT d.source,
-                       sum((w.rate_bp // 10000)
+                       CAST(sum((w.rate_bp // 10000)
                            + CASE WHEN ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))::BIGINT
                                        % 10000 < w.rate_bp % 10000
-                                  THEN 1 ELSE 0 END) AS rows_out
+                                  THEN 1 ELSE 0 END) AS BIGINT) AS rows_out
                 FROM documents d JOIN w USING (source)
                 GROUP BY 1
             )
@@ -2857,10 +2745,10 @@ def oracle_sql() -> dict[str, str]:
             ),
             o AS (
                 SELECT doc_id, shard, n_tokens,
-                       sum(n_tokens) OVER (
+                       CAST(sum(n_tokens) OVER (
                            PARTITION BY shard ORDER BY doc_id
                            ROWS UNBOUNDED PRECEDING
-                       ) - n_tokens AS start_off
+                       ) AS BIGINT) - n_tokens AS start_off
                 FROM t
             )
             SELECT doc_id, shard, n_tokens, start_off,

@@ -15,8 +15,8 @@ page classes (FIXTURES.md §1):
   news_article ⇠ textclassify Crawler4Sina      (…/crawler/textclassify/Crawler4Sina.java:83-109)
   json_api     ⇠ JSONP payloads                 (Crawler4Jingdong.java:409-515)
 
-The host distribution is Zipf-like (a few hot hosts) to exercise the
-salted host-hash partitioning required by the north rule.
+The host distribution is Zipf-like (a few hot hosts) to exercise host
+skew in the host-hash partitioned crawl state and per-host admission.
 """
 
 from __future__ import annotations

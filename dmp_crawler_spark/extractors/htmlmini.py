@@ -379,7 +379,8 @@ class _Builder(HTMLParser):
     Document.text() stream during the same pass (handle_* events arrive in
     document order, which is exactly the order Element.text() walks), so
     whole-page text costs zero extra traversals. Byte-parity with
-    Element.text() is asserted in tests/test_extractors.py."""
+    Element.text() is asserted in tests/test_extractors.py. Driven only by
+    stdlib_parse below."""
 
     def __init__(self, collect_text: bool = False) -> None:
         super().__init__(convert_charrefs=True)
@@ -393,11 +394,8 @@ class _Builder(HTMLParser):
         if (tag in _BLOCK or tag == "br") and parts and not parts[-1].endswith(" "):
             parts.append(" ")
 
-    # Both drivers deliver lowercase names already (stdlib HTMLParser
-    # lowercases tag/attr names before dispatch — parse_starttag /
-    # parse_endtag — and _fast_feed mirrors that), so the handlers don't
-    # re-lower. attrs may arrive as a list of pairs (stdlib) or a tuple of
-    # pairs (_fast_feed's memoized attr path); dict() takes either.
+    # stdlib HTMLParser lowercases tag/attr names before dispatch
+    # (parse_starttag / parse_endtag), so the handlers don't re-lower.
 
     def handle_starttag(self, tag, attrs):
         el = Element(tag, dict(attrs), parent=self.stack[-1])
@@ -436,24 +434,35 @@ class _Builder(HTMLParser):
                     parts.append(norm)
 
 
+def stdlib_parse(rawdata: str, collect_text: bool) -> tuple[Element, list | None]:
+    """The reference parse: _Builder driven by the public HTMLParser API
+    (feed + close). The parity tests pin _fused_parse to it, and it is
+    _fused_parse itself on a CPython without the private grammar."""
+    b = _Builder(collect_text=collect_text)
+    b.feed(rawdata or "")
+    b.close()
+    return b.root, b.text_parts
+
+
 # ---------------------------------------------------------------------------
-# Fast tokenizer. stdlib HTMLParser.feed spends most of its time in
-# per-construct dispatch, line/column bookkeeping (updatepos) and charref
-# scanning that a whole-document parse doesn't need; this scanner drives
-# the SAME _Builder callbacks with the same event semantics (mirroring
+# Fused tokenizer + builder. stdlib HTMLParser.feed spends most of its time
+# in per-construct dispatch, line/column bookkeeping (updatepos) and charref
+# scanning that a whole-document parse doesn't need; _fused_parse below
+# scans the document once and builds the tree inline with the same event
+# semantics as HTMLParser driving _Builder (mirroring
 # goahead/parse_starttag/parse_endtag for the convert_charrefs=True,
 # single-feed case) at a fraction of the cost. Well-formed tags take a
 # single-regex fast path; anything unusual falls back to the stdlib's own
 # tolerant regexes so attribute/recovery semantics stay byte-identical.
-# Event parity with HTMLParser is asserted over every corpus archetype and
-# a malformed-html battery in tests/test_extractors.py.
+# Parity with stdlib_parse is asserted over every corpus archetype, a
+# malformed-html battery and a fuzz sweep in tests/test_htmlmini.py.
 
 from html import unescape as _unescape  # noqa: E402  (stdlib html package)
 
 # The tolerant-grammar regexes are undocumented html.parser internals
 # (verified against CPython 3.11's module); a future CPython may remove or
 # rename them, so their absence must degrade to the public HTMLParser
-# drive (ADVICE r03), keeping _fast_feed an optimization rather than a
+# drive (ADVICE r03), keeping _fused_parse an optimization rather than a
 # hard dependency on stdlib internals.
 try:
     from html.parser import (  # noqa: E402  — the stdlib's tolerant grammar
@@ -490,215 +499,28 @@ _MARKED_CLOSE = re.compile(r"]\s*]\s*>")
 
 # Raw attribute strings repeat heavily across a site's pages (the same
 # class=/id= boilerplate on every page; measured 89% repeats on the corpus
-# archetypes), so the parsed (name, value) pairs are memoized. Values are
-# stored as an immutable tuple — each Element still gets its own fresh dict
-# (dict(pairs) in the builder), so no tree aliases another's attrs. Bounded
-# like _NORM_CACHE: unique-href churn just cycles the dict.
-_ATTR_CACHE: dict[str, tuple] = {}
-
-
-def _attr_pairs(rawattrs: str) -> tuple:
-    pairs = _ATTR_CACHE.get(rawattrs)
-    if pairs is None:
-        pairs = tuple(
-            (
-                a.group(1).lower(),
-                a.group(2)
-                if a.group(2) is not None
-                else a.group(3)
-                if a.group(3) is not None
-                else a.group(4),
-            )
-            for a in _FAST_ATTR.finditer(rawattrs)
-        )
-        if len(_ATTR_CACHE) >= _NORM_MAX_ENTRIES:
-            _ATTR_CACHE.clear()
-        _ATTR_CACHE[rawattrs] = pairs
-    return pairs
-
-
-# Attr dicts shared across elements with identical raw attr strings (the
-# fused parser's analog of _ATTR_CACHE). Safe because Element.attrs is
+# archetypes), so the parsed attr dict is memoized and SHARED across
+# elements with identical raw attr strings. Safe because Element.attrs is
 # never mutated after construction — the only write in the repo is the
 # __init__ assignment (invariant asserted by grep in round 4; selectors,
-# text() and extractors are read-only). Bounded like _NORM_CACHE.
+# text() and extractors are read-only). Bounded like _NORM_CACHE:
+# unique-href churn just cycles the dict.
 _ATTR_DICTS: dict[str, dict] = {}
 
 
 def _attr_dict(rawattrs: str) -> dict:
     d = _ATTR_DICTS.get(rawattrs)
     if d is None:
-        d = dict(_attr_pairs(rawattrs))
+        d = {}
+        for a in _FAST_ATTR.finditer(rawattrs):
+            v = a.group(2)
+            if v is None:
+                v = a.group(3) if a.group(3) is not None else a.group(4)
+            d[a.group(1).lower()] = v
         if len(_ATTR_DICTS) >= _NORM_MAX_ENTRIES:
             _ATTR_DICTS.clear()
         _ATTR_DICTS[rawattrs] = d
     return d
-
-
-def _fast_feed(rawdata: str, h) -> None:
-    """Emit HTMLParser-identical events to `h` for one complete document.
-
-    Comments / doctype / PIs are consumed and dropped (the builder ignores
-    them); data inside <script>/<style> arrives un-unescaped, exactly like
-    cdata mode."""
-    handle_data = h.handle_data
-    i, n = 0, len(rawdata)
-    cdata_elem: str | None = None
-    while i < n:
-        if cdata_elem is None:
-            j = rawdata.find("<", i)
-            if j < 0:
-                j = n
-            if i < j:
-                chunk = rawdata[i:j]
-                handle_data(_unescape(chunk) if "&" in chunk else chunk)
-            i = j
-            if i == n:
-                break
-        else:
-            m = _CDATA_CLOSE[cdata_elem].search(rawdata, i)
-            if not m:
-                # unterminated raw-text element: stdlib buffers forever
-                # (the data is never flushed) — match that
-                return
-            j = m.start()
-            if i < j:
-                handle_data(rawdata[i:j])
-            # the regex matched the complete close tag, so the endtag is
-            # unambiguous (3.11 semantics: only `</script\s*>` exits
-            # raw-text mode)
-            h.handle_endtag(cdata_elem)
-            cdata_elem = None
-            i = m.end()
-            continue
-        nxt = rawdata[i + 1:i + 2]
-        if ("a" <= nxt <= "z") or ("A" <= nxt <= "Z"):
-            # --- start tag: fast path first
-            m = _FAST_START.match(rawdata, i)
-            if m:
-                tag = m.group(1).lower()
-                rawattrs = m.group(2)
-                attrs = _attr_pairs(rawattrs) if rawattrs else ()
-                if m.group(3):
-                    h.handle_startendtag(tag, attrs)
-                else:
-                    h.handle_starttag(tag, attrs)
-                    if tag in _CDATA_CLOSE:
-                        cdata_elem = tag
-                i = m.end()
-                continue
-            # --- tolerant path (mirrors parse_starttag)
-            lm = _locatestart.match(rawdata, i)
-            j = lm.end()
-            nc = rawdata[j:j + 1]
-            if nc == ">":
-                endpos = j + 1
-            elif nc == "/":
-                if rawdata.startswith("/>", j):
-                    endpos = j + 2
-                else:
-                    endpos = j if j > i else i + 1
-            elif nc == "" or nc in (
-                "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-            ):
-                i = _flush_incomplete(rawdata, i, handle_data)
-                continue
-            else:
-                endpos = j if j > i else i + 1
-            tm = _tagfind.match(rawdata, i + 1)
-            k = tm.end()
-            tag = tm.group(1).lower()
-            attrs = []
-            while k < endpos:
-                am = _attrfind.match(rawdata, k)
-                if not am:
-                    break
-                attrname, rest, attrvalue = am.group(1, 2, 3)
-                if not rest:
-                    attrvalue = None
-                elif (
-                    attrvalue[:1] == "'" == attrvalue[-1:]
-                    or attrvalue[:1] == '"' == attrvalue[-1:]
-                ):
-                    attrvalue = attrvalue[1:-1]
-                if attrvalue:
-                    attrvalue = _unescape(attrvalue)
-                attrs.append((attrname.lower(), attrvalue))
-                k = am.end()
-            end = rawdata[k:endpos].strip()
-            if end not in (">", "/>"):
-                handle_data(rawdata[i:endpos])
-            elif end.endswith("/>"):
-                h.handle_startendtag(tag, attrs)
-            else:
-                h.handle_starttag(tag, attrs)
-                if tag in _CDATA_CLOSE:
-                    cdata_elem = tag
-            i = endpos
-        elif nxt == "/":
-            # --- end tag (mirrors parse_endtag)
-            gt = rawdata.find(">", i + 1)
-            if gt < 0:
-                i = _flush_incomplete(rawdata, i, handle_data)
-                continue
-            gtpos = gt + 1
-            em = _endtagfind.match(rawdata, i)
-            if not em:
-                nm = _tagfind.match(rawdata, i + 2)
-                if not nm:
-                    if rawdata.startswith("</>", i):
-                        i += 3
-                    else:  # bogus comment: consumed to '>'
-                        i = gtpos
-                    continue
-                h.handle_endtag(nm.group(1).lower())
-                i = rawdata.find(">", nm.end()) + 1
-                continue
-            h.handle_endtag(em.group(1).lower())
-            i = gtpos
-        elif rawdata.startswith("<!--", i):
-            m = _commentclose.search(rawdata, i + 4)
-            if not m:
-                i = _flush_incomplete(rawdata, i, handle_data)
-                continue
-            i = m.end()
-        elif rawdata.startswith("<?", i):
-            m = _piclose.search(rawdata, i + 2)
-            if not m:
-                i = _flush_incomplete(rawdata, i, handle_data)
-                continue
-            i = m.end()
-        elif rawdata.startswith("<!", i):
-            # declaration family (mirrors parse_html_declaration)
-            if rawdata.startswith("<![", i):
-                m = _MARKED_CLOSE.search(rawdata, i + 3)
-                if not m:
-                    i = _flush_incomplete(rawdata, i, handle_data)
-                    continue
-                i = m.end()
-            else:
-                gt = rawdata.find(">", i + 2)
-                if gt < 0:
-                    i = _flush_incomplete(rawdata, i, handle_data)
-                    continue
-                i = gt + 1
-        else:
-            if i + 1 < n:
-                handle_data("<")
-                i += 1
-            else:
-                handle_data("<")  # final-flush path emits the lone '<'
-                i = n
-    return
-
-
-if not _HAVE_TOLERANT_GRAMMAR:
-
-    def _fast_feed(rawdata: str, h) -> None:  # noqa: F811 — documented fallback
-        """Tolerant-grammar internals unavailable: drive the SAME builder
-        through the public HTMLParser API (identical events, slower)."""
-        h.feed(rawdata or "")
-        h.close()
 
 
 def _flush_incomplete(rawdata: str, i: int, handle_data) -> int:
@@ -737,11 +559,10 @@ _TAG_MEMO_MAX = 32  # only memoize short tag slices (see branch comment)
 
 
 def _fused_parse(rawdata: str, collect_text: bool) -> tuple[Element, list | None]:
-    """_fast_feed + _Builder fused into one pass: the same token scan
-    driving inline tree-build/text-collection instead of per-event method
-    dispatch (~390 handle_* calls per corpus page, measured ~40% of parse
-    time). Event semantics are byte-identical to _fast_feed→_Builder —
-    pinned by the same archetype/edge/fuzz parity battery in
+    """One token scan building the tree and text stream inline instead of
+    through per-event method dispatch (~390 handle_* calls per corpus
+    page, measured ~40% of parse time). The result is byte-identical to
+    stdlib_parse — pinned by the archetype/edge/fuzz parity battery in
     tests/test_htmlmini.py. Attr dicts on the well-formed fast path are
     shared via _attr_dict (Element.attrs is immutable by invariant)."""
     root = Element("#root")
@@ -1003,21 +824,16 @@ def _fused_parse(rawdata: str, collect_text: bool) -> tuple[Element, list | None
 
 
 if not _HAVE_TOLERANT_GRAMMAR:
-
-    def _fused_parse(rawdata: str, collect_text: bool) -> tuple[Element, list | None]:  # noqa: F811
-        """Tolerant-grammar internals unavailable: same result via the
-        public HTMLParser drive (ADVICE r03 fallback contract)."""
-        b = _Builder(collect_text=collect_text)
-        b.feed(rawdata or "")
-        b.close()
-        return b.root, b.text_parts
+    # tolerant-grammar internals unavailable: same result via the public
+    # HTMLParser drive (ADVICE r03 fallback contract)
+    _fused_parse = stdlib_parse  # noqa: F811
 
 
 # One-slot parse memo: the fused fetch pass derives BOTH the stripped-text
 # column and the extracted fields from the same html, and every extractor
 # opens with parse(html) — without the memo each page is DOM-parsed twice
 # (measured 3.2ms build + 2.3ms extract per page; the parse is the bulk of
-# both). Elements are never mutated after _Builder finishes (selectors and
+# both). Elements are never mutated after the parse finishes (selectors and
 # text() are read-only), so sharing the tree is safe. The value compare on
 # a hit is a ~µs memcmp vs a ~2ms reparse.
 _MEMO: list = [None, None]  # [html, root]
@@ -1042,16 +858,6 @@ def parse_with_text(html: str) -> tuple[Element, str]:
     _MEMO[0] = html
     _MEMO[1] = root
     return root, "".join(parts).strip()
-
-
-def stdlib_parse_with_text(html: str) -> tuple[Element, str]:
-    """Reference path: the same _Builder driven by stdlib HTMLParser
-    (feed + close). Exists for the event-parity tests that pin
-    _fast_feed to HTMLParser semantics; not used in the hot path."""
-    b = _Builder(collect_text=True)
-    b.feed(html or "")
-    b.close()
-    return b.root, "".join(b.text_parts).strip()
 
 
 def jsoup_text(html: str) -> str:

@@ -1,21 +1,18 @@
-"""Vectorized extraction stages: Arrow-batched mapInPandas over pages.
+"""The crawl's one Python stage: the fused fetch+extract pass.
 
 This is the Spark rewrite of the reference's per-site `visit()` dispatch
-(e.g. …/crawler/auto/Crawler4Autohome.java:125-141): classification by URL
-regex happens JVM-side; the HTML field extraction — inherently a parse, the
-one thing Catalyst can't express — runs in Arrow batches through the shared
-oracle functions (extractors/oracle.py), so the pandas-UDF output is
-byte-identical to the oracle by construction.
+(e.g. …/crawler/auto/Crawler4Autohome.java:125-141). The HTML field
+extraction — inherently a parse, the one thing Catalyst can't express —
+runs in Arrow batches through the shared oracle functions
+(extractors/oracle.py), so the pass's result rows are byte-identical to
+the oracle by construction.
 
 Output model mirrors the reference's 3-level HBase map
 (…/crawler/BaseCrawler.java:28-55): (rowkey, family, cols map<string,string>).
 
-fetch_extract_pass is the crawl loop's one Python stage: every fetcher
-runs it, so page landing, extraction and link discovery
-(HtmlParseData.getOutgoingUrls + addSeed, e.g.
+Every fetcher runs fetch_extract_pass, so page landing, extraction and
+link discovery (HtmlParseData.getOutgoingUrls + addSeed, e.g.
 …/crawler/auto/Crawler4BitAuto.java:357,564) happen in one pass per page.
-extract_pages / discover_links are the standalone forms over a pages
-table (url, html).
 """
 
 from __future__ import annotations
@@ -25,24 +22,10 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dmp_crawler_spark.extractors import oracle
 from dmp_crawler_spark.frontier.urlnorm import py_normalize_url, py_resolve_link
-
-EXTRACT_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("rowkey", T.StringType(), True),
-    T.StructField("family", T.StringType(), True),
-    T.StructField("cols", T.MapType(T.StringType(), T.StringType()), True),
-])
-
-LINKS_SCHEMA = T.StructType([
-    T.StructField("src_url", T.StringType(), False),
-    T.StructField("out_url", T.StringType(), False),
-    T.StructField("anchor", T.StringType(), True),
-])
 
 _HREF_RE = r'<a\s[^>]*href="([^"#]+)"[^>]*>(.*?)</a>'
 
@@ -57,47 +40,6 @@ def _decode(html) -> str:
         except UnicodeDecodeError:
             return bytes(html).decode("gbk", errors="replace")
     return str(html)
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list] = {"url": [], "rowkey": [], "family": [], "cols": []}
-        for url, html in zip(pdf["url"].values, pdf["html"].values):
-            for row in oracle.extract(url, _decode(html)):
-                out["url"].append(url)
-                out["rowkey"].append(row["rowkey"])
-                out["family"].append(row["family"])
-                out["cols"].append(row["cols"])
-        yield pd.DataFrame(out, columns=["url", "rowkey", "family", "cols"])
-
-
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, html, …) -> (url, rowkey, family, cols).
-
-    Column-prunes to (url, html) before the Python stage so the Arrow
-    transfer carries only what the parse needs.
-    """
-    return pages.select("url", "html").mapInPandas(_extract_batches, EXTRACT_SCHEMA)
-
-
-def _links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        html = pdf["html"].map(_decode)
-        hits = html.str.extractall(_HREF_RE)  # vectorized, not per-row Python
-        if hits.empty:
-            yield pd.DataFrame({"src_url": [], "out_url": [], "anchor": []}).astype(str)
-            continue
-        src = pdf["url"].iloc[hits.index.get_level_values(0)].reset_index(drop=True)
-        yield pd.DataFrame({
-            "src_url": src,
-            "out_url": hits[0].reset_index(drop=True),
-            "anchor": hits[1].reset_index(drop=True),
-        })
-
-
-def discover_links(pages: DataFrame) -> DataFrame:
-    """pages(url, html, …) -> exploded (src_url, out_url, anchor) rows."""
-    return pages.select("url", "html").mapInPandas(_links_batches, LINKS_SCHEMA)
 
 
 # columns the fetch+extract pass appends to the caller's meta columns
@@ -149,7 +91,7 @@ def fetch_extract_pass(
     ~7× (measured 800k vs 560k link rows/iteration at bench scale)."""
     out_schema = T.StructType([df.schema[c] for c in meta] + PASS_FIELDS)
     names = out_schema.fieldNames()
-    # same flags as discover_links' str.extractall (no DOTALL)
+    # no DOTALL: an <a> whose body spans a newline is not matched
     href_re = re.compile(_HREF_RE)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -212,10 +154,3 @@ def fetch_extract_pass(
 
     return df.mapInPandas(gen, out_schema)
 
-
-def classify_pages(pages: DataFrame) -> DataFrame:
-    """F2 URL-class dispatch, JVM-side (regex gate before the Python stage),
-    mirroring shouldVisit (…/crawler/auto/Crawler4Autohome.java:97-141)."""
-    return pages.withColumn(
-        "page_class", F.regexp_extract("url", r"https?://[^/]+/([a-z_]+)/", 1)
-    )

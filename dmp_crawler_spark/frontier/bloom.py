@@ -259,9 +259,9 @@ def dedup_candidates(candidates: DataFrame, seen: DataFrame | None,
     engine-scale plan): bloom prefilter → exact left_anti for the
     maybe-seen slice → union with the definitely-new slice.
 
-    100×-scale plan (round-2 verdict item 2): when both sides carry the
+    100×-scale plan (round-2 verdict item 2): both sides carry the
     128-bit fingerprint (url_hash, url_hash2 — two independent xxhash64
-    seeds), the anti-join keys on the two LONGS, so the seen side shuffles
+    seeds) and the anti-join keys on the two LONGS, so the seen side shuffles
     16 B/row instead of full URL strings. A 128-bit fingerprint makes a
     string tie-break unnecessary: at 10^10 URLs the probability of ANY
     colliding pair across the whole crawl is (10^10)^2 / 2^129 ≈ 1.5e-19 —
@@ -276,25 +276,11 @@ def dedup_candidates(candidates: DataFrame, seen: DataFrame | None,
     With manifest_path=None (bloom gated off below the engine's
     bloom_min_seen threshold) every candidate goes straight
     to the exact anti-join — no Arrow prefilter round trip, no persist
-    unless the shard-prune collect needs one.
-
-    Falls back to the legacy url-string join when either side lacks the
-    fingerprint columns (plain-url seen tables in tests/tools)."""
+    unless the shard-prune collect needs one."""
     have_bloom = manifest_path is not None and os.path.exists(manifest_path)
     tagged = prefilter(candidates, manifest_path) if have_bloom else candidates
     if seen is None:
         return tagged.drop("maybe_seen") if have_bloom else tagged
-    hash_keyed = (
-        {"url_hash", "url_hash2"} <= set(seen.columns)
-        and {"url_hash", "url_hash2"} <= set(candidates.columns)
-    )
-    if not hash_keyed:
-        if not have_bloom:
-            return candidates.join(seen.select("url"), "url", "left_anti")
-        definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        survived = maybe.join(seen.select("url"), "url", "left_anti")
-        return definitely_new.unionByName(survived)
     cache = None
     if have_bloom:
         # materialize the tagged candidates once: the shard-set collect

@@ -1,12 +1,15 @@
-"""URL normalization + host-hash columns (all JVM-side Column expressions).
+"""URL normalization + host-hash columns.
 
 The reference leans on crawler4j's URLCanonicalizer; here normalization is
 declarative so Catalyst keeps it inside whole-stage codegen:
 
   - strip fragment, lowercase scheme+host, drop default port
-  - resolve relative hrefs against the source URL (crawler4j absUrl)
-  - host + host_hash = xxhash64(host) — the partitioning key the whole
-    engine shuffles on (north rule: salted host-hash partitioning)
+  - host + host_hash = xxhash64(host) — the key the engine partitions
+    crawl state and politeness admission on
+
+Relative hrefs are resolved inside the fused fetch+extract pass
+(py_resolve_link ≡ urljoin ≙ crawler4j absUrl), which also applies the
+byte-identical pure-Python normalize (py_normalize_url).
 """
 
 from __future__ import annotations
@@ -18,10 +21,6 @@ from pyspark.sql import functions as F
 def host_of(url: Column | str) -> Column:
     c = F.col(url) if isinstance(url, str) else url
     return F.lower(F.parse_url(c, F.lit("HOST")))
-
-
-def host_hash_of(url: Column | str) -> Column:
-    return F.xxhash64(host_of(url))
 
 
 def normalize_url(url: Column | str) -> Column:
@@ -36,68 +35,6 @@ def normalize_url(url: Column | str) -> Column:
     c = F.regexp_replace(c, r"^(http://[^/:]+):80(?=/|\?|$)", "$1")
     c = F.regexp_replace(c, r"^(https://[^/:]+):443(?=/|\?|$)", "$1")
     return c
-
-
-def _normalize_dots(url: Column) -> Column:
-    """RFC 3986 §5.2.4 remove-dot-segments on the path of an absolute URL,
-    as a pure Column expression: split the path on '/', fold segments with
-    F.aggregate ('.' skipped, '..' pops, clamped at root), and re-join.
-    Query/fragment are held aside so '?a=./x' is untouched."""
-    base = F.regexp_extract(url, r"^(https?://[^/?#]*)", 1)
-    path = F.regexp_extract(url, r"^https?://[^/?#]*([^?#]*)", 1)
-    tail = F.regexp_extract(url, r"^https?://[^/?#]*[^?#]*([?#].*)?$", 1)
-    has_dots = path.rlike(r"(^|/)\.\.?(/|$)")
-    segs = F.split(path, "/")
-    folded = F.aggregate(
-        segs,
-        F.expr("CAST(array() AS array<string>)"),
-        lambda acc, s: (
-            F.when(s == ".", acc)
-            .when(
-                s == "..",
-                F.when(
-                    F.size(acc) > 1,
-                    F.slice(acc, 1, F.size(acc) - 1),
-                ).otherwise(acc),
-            )
-            .otherwise(F.concat(acc, F.array(s)))
-        ),
-    )
-    last = F.element_at(segs, -1)
-    rebuilt = F.concat_ws("/", folded)
-    # '.'/'..' as the FINAL segment leaves a trailing slash (urljoin parity)
-    rebuilt = F.when(
-        (last == ".") | (last == ".."), F.concat(rebuilt, F.lit("/"))
-    ).otherwise(rebuilt)
-    return F.when(has_dots, F.concat(base, rebuilt, tail)).otherwise(url)
-
-
-def resolve_link(src: Column | str, href: Column | str) -> Column:
-    """crawler4j/jsoup absUrl ≙ RFC 3986 relative resolution: absolute
-    stays; '//host/x' inherits scheme; '/x' joins scheme://host; '?q'
-    replaces the source query; '#f' replaces the fragment; 'x' joins the
-    source directory. './' and '../' segments are then normalized
-    (remove-dot-segments, clamped at root). Property-tested against
-    urllib.parse.urljoin (tests/test_frontier.py)."""
-    s = F.col(src) if isinstance(src, str) else src
-    h = F.col(href) if isinstance(href, str) else href
-    scheme = F.regexp_extract(s, r"^(https?)://", 1)
-    base = F.regexp_extract(s, r"^(https?://[^/]+)", 1)
-    src_no_frag = F.regexp_replace(s, r"#.*$", "")
-    src_no_query = F.regexp_replace(src_no_frag, r"\?.*$", "")
-    src_dir = F.regexp_extract(src_no_query, r"^(https?://.*/)[^/]*$", 1)
-    # pathless source ("http://a.com"): the directory is the root
-    src_dir = F.when(src_dir == "", F.concat(base, F.lit("/"))).otherwise(src_dir)
-    joined = (
-        F.when(h.rlike(r"^https?://"), h)
-        .when(h.startswith("//"), F.concat(scheme, F.lit(":"), h))
-        .when(h.startswith("/"), F.concat(base, h))
-        .when(h.startswith("?"), F.concat(src_no_query, h))
-        .when(h.startswith("#"), F.concat(src_no_frag, h))
-        .when(h == "", s)
-        .otherwise(F.concat(src_dir, h))
-    )
-    return _normalize_dots(joined)
 
 
 import re as _re
@@ -158,16 +95,3 @@ def with_url_cols(df: DataFrame, url_col: str = "url") -> DataFrame:
         "host_hash", F.xxhash64(F.col("host"))
     )
 
-
-def salted_partition(host_hash: Column | str, n_partitions: int, salt_buckets: int = 1,
-                     url: Column | str | None = None) -> Column:
-    """Partition id with optional per-host salting: hot hosts (Zipf head)
-    spread over `salt_buckets` partitions so one domain can't pin an
-    executor; politeness caps are applied per-host before this, so the
-    split never violates ordering semantics."""
-    hh = F.col(host_hash) if isinstance(host_hash, str) else host_hash
-    if salt_buckets <= 1 or url is None:
-        return F.pmod(hh, F.lit(n_partitions))
-    u = F.col(url) if isinstance(url, str) else url
-    salt = F.pmod(F.xxhash64(u), F.lit(salt_buckets))
-    return F.pmod(hh + salt, F.lit(n_partitions))

@@ -1,8 +1,8 @@
 """Text-analysis columns for a large-scale training-data pipeline.
 
 Language ID (character-class heuristic), quality scoring (length /
-punctuation / stopword ratios), token counting (whitespace + BPE-ish
-regex), and document fingerprinting (rolling hash) — all as JVM-side
+punctuation / word-length / stopword gates), token counting (whitespace +
+BPE-ish regex), normalized-text and fingerprint dedup keys — all as JVM-side
 Column expressions over a `text` column, so they run inside whole-stage
 codegen at 100 TB with zero Python cost.
 
@@ -28,10 +28,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def n_chars(col: Column | str) -> Column:
-    return F.length(_c(col))
-
-
 def ws_token_count(col: Column | str) -> Column:
     """Whitespace token count; 0 for empty/blank strings."""
     t = F.trim(_c(col))
@@ -42,19 +38,7 @@ def ws_token_count(col: Column | str) -> Column:
 
 def bpe_token_count(col: Column | str) -> Column:
     """BPE-ish token count via the pretokenizer regex (regexp_count)."""
-    return F.regexp_count(_c(col), TOKEN_REGEX)
-
-
-def cjk_ratio(col: Column | str) -> Column:
-    c = _c(col)
-    cjk = F.regexp_count(c, r"[一-鿿]")
-    return F.when(F.length(c) > 0, cjk / F.length(c)).otherwise(F.lit(0.0))
-
-
-def latin_ratio(col: Column | str) -> Column:
-    c = _c(col)
-    latin = F.regexp_count(c, r"[A-Za-z]")
-    return F.when(F.length(c) > 0, latin / F.length(c)).otherwise(F.lit(0.0))
+    return F.regexp_count(_c(col), F.lit(TOKEN_REGEX))
 
 
 def detect_lang(col: Column | str) -> Column:
@@ -62,50 +46,49 @@ def detect_lang(col: Column | str) -> Column:
     else 'und'. Deterministic, cheap, codegen'd — the n-gram model upgrade
     slots in behind the same column name."""
     c = _c(col)
+    ln = F.length(c)
+    cjk = ln - F.length(F.regexp_replace(c, "[一-鿿]", ""))
+    latin = ln - F.length(F.regexp_replace(c, "[A-Za-z]", ""))
     return (
-        F.when(cjk_ratio(c) > 0.25, F.lit("zh"))
-        .when(latin_ratio(c) > 0.4, F.lit("en"))
+        F.when((ln > 0) & (cjk / ln > 0.25), F.lit("zh"))
+        .when((ln > 0) & (latin / ln > 0.4), F.lit("en"))
         .otherwise(F.lit("und"))
     )
 
 
-def punct_ratio(col: Column | str) -> Column:
-    c = _c(col)
-    p = F.regexp_count(c, r"[\p{P}\p{S}]")
-    return F.when(F.length(c) > 0, p / F.length(c)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column | str) -> Column:
-    """Fraction of whitespace tokens that are English stopwords."""
-    c = F.lower(_c(col))
-    toks = ws_token_count(c)
-    sw = F.regexp_count(c, r"\b(" + _EN_STOPWORDS + r")\b")
-    return F.when(toks > 0, sw / toks).otherwise(F.lit(0.0))
-
-
-def mean_word_length(col: Column | str) -> Column:
-    c = _c(col)
-    toks = ws_token_count(c)
-    nonspace = F.length(F.regexp_replace(c, r"\s+", ""))
-    return F.when(toks > 0, nonspace / toks).otherwise(F.lit(0.0))
-
-
 def quality_score(col: Column | str) -> Column:
-    """Composite [0,1] web-text quality score from cheap signals:
-    length band, punctuation sanity, stopword presence, word-length
-    sanity. Gopher-rules-style heuristics, tuned to be monotone and
-    deterministic (no model weights)."""
+    """Composite [0,1] web-text quality score from four cheap gates:
+    length band, punctuation sanity, word-length sanity, stopword (or CJK)
+    presence. Gopher-rules-style heuristics, deterministic (no model
+    weights), rounded to 4 decimals."""
     c = _c(col)
-    length_ok = F.when(
-        (F.length(c) >= 50) & (F.length(c) <= 100000), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(c) < 0.3, F.lit(1.0)).otherwise(F.lit(0.0))
-    mwl = mean_word_length(c)
-    word_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
-    sw_ok = F.when(
-        (stopword_ratio(c) > 0.05) | (cjk_ratio(c) > 0.25), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    return (length_ok + punct_ok + word_ok + sw_ok) / F.lit(4.0)
+    ln = F.length(c)
+    punct = ln - F.length(F.regexp_replace(c, r"[\p{P}\p{S}]", ""))
+    toks = ws_token_count(c)
+    nonspace = F.length(F.regexp_replace(c, r"\s", ""))
+    mwl = F.when(toks > 0, nonspace / toks).otherwise(F.lit(0.0))
+    sw = F.size(
+        F.regexp_extract_all(
+            F.lower(c), F.lit(r"\b(" + _EN_STOPWORDS + r")\b"), F.lit(0)
+        )
+    )
+    swr = F.when(toks > 0, sw / toks).otherwise(F.lit(0.0))
+    cjk = ln - F.length(F.regexp_replace(c, "[一-鿿]", ""))
+    length_ok = F.when((ln >= 50) & (ln <= 100000), 1.0).otherwise(0.0)
+    punct_ok = F.when((ln > 0) & (punct / ln < 0.3), 1.0).otherwise(0.0)
+    word_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), 1.0).otherwise(0.0)
+    sw_ok = F.when((swr > 0.05) | ((ln > 0) & (cjk / ln > 0.25)), 1.0).otherwise(0.0)
+    return F.round((length_ok + punct_ok + word_ok + sw_ok) / 4.0, 4)
+
+
+def norm_text(col: Column | str) -> Column:
+    """Punct-stripped, whitespace-collapsed, lowercased text: the
+    exact-dedup key."""
+    return F.trim(
+        F.regexp_replace(
+            F.regexp_replace(F.lower(_c(col)), r"[\p{P}]", ""), r"\s+", " "
+        )
+    )
 
 
 def doc_fingerprint(col: Column | str) -> Column:

@@ -27,8 +27,8 @@ Three stages every LLM-corpus build runs between "clean documents" and
    ranks them within each shard. One hash exchange on the shard key,
    per-shard window rank — no global sort anywhere, which is what lets
    10^10 docs shuffle without range-partitioning the world.
- - pack_sequences: concat-and-chunk packing of documents into
-   fixed-capacity token windows (the GPT-style pretraining layout).
+ - pack_sequences: concat-and-chunk packing of token-counted documents
+   into fixed-capacity token windows (the GPT-style pretraining layout).
    Packing is per-SHARD (partitionBy shard, orderBy doc_id): one shuffle
    on the shard key, a window cumsum within each shard, no global sort —
    at 10^10 docs you shard by hash(doc_id) % K and each shard packs
@@ -237,39 +237,30 @@ def shuffle_shards(
 def pack_sequences(
     docs: DataFrame,
     capacity: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    shard_col: str = "shard",
+    order_col: str = "doc_id",
 ) -> DataFrame:
-    """Concat-and-chunk packing: within each shard, documents are laid out
-    contiguously in doc_id order and cut into fixed `capacity`-token
-    sequences (documents may span a boundary — the GPT pretraining layout).
-    Returns (doc_id, shard, n_tokens, start_off, first_seq, last_seq).
+    """Concat-and-chunk packing of rows that already carry `n_tokens`:
+    within each shard, rows are laid out contiguously in `order_col` order
+    and cut into fixed `capacity`-token sequences (documents may span a
+    boundary — the GPT pretraining layout). Returns the input columns plus
+    (start_off, first_seq, last_seq).
 
     One shuffle (partitionBy shard); the cumsum is a running window within
     the shard, so no global ordering exists anywhere in the plan.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(shard_col).alias("shard"),
-        TS.ws_token_count(text_col).cast("long").alias("n_tokens"),
-    )
     w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
+        Window.partitionBy(shard_col)
+        .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    off = toks.withColumn(
+    off = docs.withColumn(
         "start_off", F.sum("n_tokens").over(w) - F.col("n_tokens")
     )
-    first_seq = F.floor(F.col("start_off") / capacity)
     last_tok = F.col("start_off") + F.greatest(F.col("n_tokens"), F.lit(1)) - 1
     return off.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        "start_off",
-        first_seq.alias("first_seq"),
+        "*",
+        F.floor(F.col("start_off") / capacity).alias("first_seq"),
         # empty docs occupy no tokens: pin them to their start boundary
         F.floor(last_tok / capacity).alias("last_seq"),
     )

@@ -2,13 +2,14 @@
 
 Three layers:
  1. oracle vs template ground truth, all archetypes (pure Python);
- 2. Spark mapInPandas extractor vs oracle, byte-for-byte;
+ 2. the crawl's fused fetch+extract pass vs oracle, byte-for-byte;
  3. generated `text` column == jsoup_text(html) (the text contract).
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from dmp_crawler_spark.corpus import generator, templates
 from dmp_crawler_spark.extractors import oracle, udfs
@@ -46,11 +47,20 @@ def test_text_column_is_jsoup_text():
             assert p["text"] == jsoup_text(p["html"].decode("utf-8"))
 
 
+def _fused_pass(pages):
+    """The crawl's fetch+extract pass over a materialized pages table."""
+    return udfs.fetch_extract_pass(
+        pages.withColumn("depth", F.lit(0)),
+        ["url", "depth"],
+        lambda row: (udfs._decode(row["html"]), row["lang"], row["text"]),
+    )
+
+
 def test_spark_extract_matches_oracle(spark):
     pages = generator.generate_pages(spark, 300, partitions=4).cache()
     got = {
         (r["url"], r["rowkey"]): (r["family"], dict(r["cols"]))
-        for r in udfs.extract_pages(pages).collect()
+        for r in _fused_pass(pages).filter(F.col("kind") == "result").collect()
     }
     exp = {}
     for r in pages.select("url", "html").collect():
@@ -62,13 +72,14 @@ def test_spark_extract_matches_oracle(spark):
 
 def test_spark_link_discovery(spark):
     pages = generator.generate_pages(spark, 200, partitions=4)
-    links = [r for r in udfs.discover_links(pages).collect()
-             if r["out_url"].startswith("http://")]
-    exp_total = sum(len(templates.outlinks_for(i, 200)) for i in range(200))
-    assert len(links) == exp_total
-    # every discovered absolute link is a valid generated URL
-    valid = {templates.url_for(i, 200) for i in range(200)}
-    assert all(r["out_url"] in valid for r in links)
+    out = _fused_pass(pages)
+    assert "html" not in out.columns
+    found = {
+        r["out_url"]
+        for r in out.filter(F.col("kind") == "link").select("out_url").collect()
+    }
+    exp = {u for i in range(200) for u in templates.outlinks_for(i, 200)}
+    assert exp and exp <= found
 
 
 def test_pages_schema_matches_input_hint(spark):

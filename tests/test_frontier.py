@@ -12,7 +12,9 @@ from dmp_crawler_spark.corpus import generator, templates
 from dmp_crawler_spark.frontier import bloom, politeness, robots as robots_mod
 from dmp_crawler_spark.frontier.scheduler import CorpusFetcher, CrawlEngine
 from dmp_crawler_spark.frontier.simulator import FrontierSimulator
-from dmp_crawler_spark.frontier.urlnorm import normalize_url, resolve_link
+from dmp_crawler_spark.frontier.urlnorm import (
+    normalize_url, py_normalize_url, py_resolve_link,
+)
 
 N_URLS = 400
 
@@ -155,15 +157,21 @@ def test_bloom_prefilter_no_false_negatives(spark):
 
 def test_dedup_candidates_exactness(spark):
     import tempfile
-    seen = spark.createDataFrame(
-        [(f"http://a.com/{i}",) for i in range(100)], "url string"
-    ).withColumn("url_hash", F.xxhash64("url")).withColumn("host_hash", F.xxhash64(F.lit("a.com")))
+
+    def keyed(ids):
+        return (
+            spark.createDataFrame(
+                [(f"http://a.com/{i}",) for i in ids], "url string"
+            )
+            .withColumn("url_hash", F.xxhash64("url"))
+            .withColumn("url_hash2", F.xxhash64("url", F.lit(1)))
+            .withColumn("host_hash", F.xxhash64(F.lit("a.com")))
+        )
+
+    seen = keyed(range(100))
     d = tempfile.mkdtemp()
     manifest = bloom.build_shards(seen, d, n_shards=4)
-    cands = spark.createDataFrame(
-        [(f"http://a.com/{i}",) for i in range(50, 150)], "url string"
-    ).withColumn("url_hash", F.xxhash64("url")).withColumn("host_hash", F.xxhash64(F.lit("a.com")))
-    new = bloom.dedup_candidates(cands, seen.select("url"), manifest)
+    new = bloom.dedup_candidates(keyed(range(50, 150)), seen, manifest)
     got = sorted(r["url"] for r in new.collect())
     assert got == sorted(f"http://a.com/{i}" for i in range(100, 150))
 
@@ -307,45 +315,15 @@ def test_cross_fetcher_parity(spark, tmp_path):
     assert {lang for _, lang in crawled_lang["gen"]} == {"zh", "en"}
 
 
-def test_resolve_link_urljoin_parity(spark):
-    """Property-style parity vs urllib.parse.urljoin over the cross product
-    of source shapes × href shapes, incl. '../' chains, './', query-only,
-    fragment-only, and empty hrefs (round-1 verdict item 9). One DataFrame
-    pass — not per-example Spark jobs."""
-    from urllib.parse import urljoin
-
-    srcs = [
-        "http://a.com/x/y.html",
-        "http://a.com/x/y/z.html?q=1#f",
-        "http://a.com/",
-        "http://a.com",
-        "http://a.com/x/",
-        "https://b.com/p/q/r",
-    ]
-    hrefs = [
-        "z.html", "./z.html", "../z.html", "../../z.html",
-        "../../../../z.html", "a/../b.html", "./../a/./b/../c.html",
-        "/abs/./x/../y.html", "//c.com/d", "http://c.com/e",
-        "?q=2", "#frag", "", "sub/dir/", "..", "../", ".", "./",
-    ]
-    rows = [(s, h, urljoin(s, h)) for s in srcs for h in hrefs]
-    df = spark.createDataFrame(rows, "src string, href string, expected string")
-    bad = df.select(
-        "src", "href", resolve_link("src", "href").alias("got"), "expected"
-    ).filter(F.col("got") != F.col("expected")).collect()
-    assert not bad, bad
-
-
 def test_py_resolve_link_urljoin_parity():
-    """py_resolve_link (the fetch worker's fast path) must be byte-identical
-    to urljoin over the same matrix as the Column version, plus shapes that
-    specifically exercise its guards: query-bearing pathless sources (the
-    base regex must stop at '?'), dot segments inside absolute and
-    root-relative hrefs (urljoin removes them even when the href is
-    absolute — those must fall through), and uppercase schemes."""
+    """py_resolve_link (the fetch worker's resolver) must be byte-identical
+    to urljoin over the cross product of source shapes × href shapes, incl.
+    '../' chains, './', query-only, fragment-only and empty hrefs, plus
+    shapes that specifically exercise its guards: query-bearing pathless
+    sources (the base regex must stop at '?'), dot segments inside
+    absolute and root-relative hrefs (urljoin removes them even when the
+    href is absolute — those must fall through), and uppercase schemes."""
     from urllib.parse import urljoin
-
-    from dmp_crawler_spark.frontier.urlnorm import py_resolve_link
 
     srcs = [
         "http://a.com/x/y.html",
@@ -390,21 +368,15 @@ def test_normalize_url_strips_default_ports(spark):
     assert not bad, bad
 
 
-def test_url_normalization_and_resolve(spark):
-    df = spark.createDataFrame(
-        [
-            ("http://A.Com/x/y.html", "z.html", "http://a.com/x/z.html"),
-            ("http://a.com/x/y.html", "/root.html", "http://a.com/root.html"),
-            ("http://a.com/x/y.html", "//b.com/c", "http://b.com/c"),
-            ("http://a.com/x/y.html", "http://c.com/d#frag", "http://c.com/d"),
-        ],
-        "src string, href string, expected string",
-    )
-    out = df.select(
-        normalize_url(resolve_link("src", "href")).alias("got"), "expected"
-    ).collect()
-    for r in out:
-        assert r["got"] == r["expected"], r
+def test_url_normalization_and_resolve():
+    """The fused pass's link path: resolve, then normalize."""
+    for src, href, expected in [
+        ("http://A.Com/x/y.html", "z.html", "http://a.com/x/z.html"),
+        ("http://a.com/x/y.html", "/root.html", "http://a.com/root.html"),
+        ("http://a.com/x/y.html", "//b.com/c", "http://b.com/c"),
+        ("http://a.com/x/y.html", "http://c.com/d#frag", "http://c.com/d"),
+    ]:
+        assert py_normalize_url(py_resolve_link(src, href)) == expected, href
 
 
 def test_seen_anti_join_hash_keyed_and_shard_pruned(spark, corpus_path, tmp_path):
@@ -619,8 +591,6 @@ def test_py_normalize_url_parity(spark):
     case, ports, fragments, trailing '?', userinfo-ish hosts, and the
     urljoin outputs of the resolve parity matrix."""
     from urllib.parse import urljoin
-
-    from dmp_crawler_spark.frontier.urlnorm import py_normalize_url
 
     urls = [
         "http://A.Com/x/y.html", "http://a.com:80/x", "http://a.com:80",

@@ -56,7 +56,7 @@ def test_elements_containing_own_text():
 
 
 # ---------------------------------------------------------------------------
-# _fast_feed event parity vs stdlib HTMLParser: the fast tokenizer must
+# _fused_parse parity vs stdlib HTMLParser: the fused tokenizer must
 # produce an IDENTICAL tree and text stream to HTMLParser(feed+close) for
 # every corpus archetype, a malformed-html battery, and a deterministic
 # fragment-soup fuzz sweep.
@@ -70,20 +70,10 @@ def _dump(el):
 
 
 def _stdlib(html):
-    from dmp_crawler_spark.extractors.htmlmini import _Builder
+    from dmp_crawler_spark.extractors.htmlmini import stdlib_parse
 
-    b = _Builder(collect_text=True)
-    b.feed(html or "")
-    b.close()
-    return _dump(b.root), "".join(b.text_parts).strip()
-
-
-def _fast(html):
-    from dmp_crawler_spark.extractors.htmlmini import _Builder, _fast_feed
-
-    b = _Builder(collect_text=True)
-    _fast_feed(html or "", b)
-    return _dump(b.root), "".join(b.text_parts).strip()
+    root, parts = stdlib_parse(html or "", True)
+    return _dump(root), "".join(parts).strip()
 
 
 def _fused(html):
@@ -117,23 +107,21 @@ _EDGE_HTML = [
 ]
 
 
-def test_fast_feed_parity_archetypes():
+def test_fused_parse_parity_archetypes():
     n = 200000
     for i in range(0, 256):
         html = templates.build_page(i * 251 % n, n)["html"].decode("utf-8")
         ref = _stdlib(html)
-        assert ref == _fast(html), f"archetype page idx={i * 251 % n}"
         assert ref == _fused(html), f"fused archetype page idx={i * 251 % n}"
 
 
-def test_fast_feed_parity_edge_cases():
+def test_fused_parse_parity_edge_cases():
     for html in _EDGE_HTML:
         ref = _stdlib(html)
-        assert ref == _fast(html), repr(html)
         assert ref == _fused(html), repr(html)
 
 
-def test_fast_feed_parity_fuzz():
+def test_fused_parse_parity_fuzz():
     import random
 
     rng = random.Random(7)
@@ -147,7 +135,6 @@ def test_fast_feed_parity_fuzz():
             rng.choice(frags) for _ in range(rng.randint(1, 25))
         )
         ref = _stdlib(html)
-        assert ref == _fast(html), repr(html)
         assert ref == _fused(html), repr(html)
 
 

@@ -37,15 +37,18 @@ def test_column_pruning(lineitem):
 
 
 def test_extract_stage_prunes_html_from_output(spark):
-    """The extraction stage must select only (url, html) into the Python
-    worker and html must not survive into the output plan."""
+    """The fetch+extract pass consumes html inside the Python worker:
+    html must not survive into the output plan."""
     from dmp_crawler_spark.corpus import generator
-    from dmp_crawler_spark.extractors.udfs import extract_pages
+    from dmp_crawler_spark.extractors import udfs
 
     pages = generator.generate_pages(spark, 50, partitions=2)
-    out = extract_pages(pages)
+    out = udfs.fetch_extract_pass(
+        pages.withColumn("depth", F.lit(0)),
+        ["url", "depth"],
+        lambda row: (udfs._decode(row["html"]), row["lang"], row["text"]),
+    )
     assert "html" not in out.columns
-    assert "text" not in out.columns
 
 
 def test_admission_plan_single_shuffle(spark):
@@ -230,8 +233,8 @@ def test_pack_sequences_single_shuffle_no_global_sort(spark):
     from dmp_crawler_spark.operators import training as TR
 
     docs = spark.createDataFrame(
-        [(i, f"s{i % 4}", "a b c") for i in range(100)],
-        "doc_id long, source string, text string",
+        [(i, f"s{i % 4}", 3) for i in range(100)],
+        "doc_id long, shard string, n_tokens long",
     )
     out = TR.pack_sequences(docs, capacity=16)
     assert inspect.count_exchanges(out) == 1

@@ -73,12 +73,27 @@ def test_domain_mix_summary_keeps_zero_sources(spark):
     assert out["s1"]["rows_out"] == 5
 
 
+def _packed(docs, capacity):
+    """pack_sequences over (doc_id, shard = source, whitespace n_tokens)."""
+    from dmp_crawler_spark.functions import textstats as TS
+
+    counted = docs.select(
+        "doc_id",
+        F.col("source").alias("shard"),
+        TS.ws_token_count("text").cast("long").alias("n_tokens"),
+    )
+    return {
+        r["doc_id"]: r
+        for r in TR.pack_sequences(counted, capacity=capacity).collect()
+    }
+
+
 def test_pack_sequences_layout(spark):
     # 3 docs of 10 tokens each in one shard, capacity 16:
     # doc1 [0,10), doc2 [10,20) spans seqs 0-1, doc3 [20,30) in seq 1
     ten = " ".join(f"t{i}" for i in range(10))
     docs = _docs(spark, [(1, "a", ten), (2, "a", ten), (3, "a", ten), (4, "b", ten)])
-    out = {r["doc_id"]: r for r in TR.pack_sequences(docs, capacity=16).collect()}
+    out = _packed(docs, 16)
     assert (out[1]["start_off"], out[1]["first_seq"], out[1]["last_seq"]) == (0, 0, 0)
     assert (out[2]["start_off"], out[2]["first_seq"], out[2]["last_seq"]) == (10, 0, 1)
     assert (out[3]["start_off"], out[3]["first_seq"], out[3]["last_seq"]) == (20, 1, 1)
@@ -88,7 +103,7 @@ def test_pack_sequences_layout(spark):
 
 def test_pack_sequences_empty_doc_zero_width(spark):
     docs = _docs(spark, [(1, "a", "one two three"), (2, "a", "   "), (3, "a", "x")])
-    out = {r["doc_id"]: r for r in TR.pack_sequences(docs, capacity=8).collect()}
+    out = _packed(docs, 8)
     assert out[2]["n_tokens"] == 0
     assert out[2]["first_seq"] == out[2]["last_seq"]
     # the empty doc consumes no offset: doc3 starts where doc2 did + 0
