@@ -591,20 +591,21 @@ def corpus_clean(spark, d):
     junk guards) generalized to a corpus-wide pipeline.
 
     Scale shape: stages 1-2 are codegen'd column expressions computed in a
-    SINGLE scan pass whose result is persisted — the gate/norm regex stack
-    is the per-row hot cost, and without the materialization Catalyst
-    re-inlines it into every downstream consumer (filter + exact-dedup agg
-    + LSH signature build + each label-propagation round re-evaluate it:
-    measured 6.4 s vs 3.5 s at sf0.1). Stage 3 is one hash-partition
-    shuffle on the normalized-text key; stage 4 is the banded LSH join
-    (never all-pairs, text stripped from the shuffled pair set) plus
-    size-gated connected components over the (small) pair graph only —
-    driver union-find below 2M edges (the broadcast-side resource
-    contract), distributed min-label propagation above. Total: ~2
-    shuffles over the full corpus regardless of corpus size. At 100 TB the
-    persist becomes a parquet materialization of the scored corpus — still
-    the right plan: every stage after the scan reads the 4-column scored
-    projection, not the raw corpus."""
+    SINGLE scan pass whose result is materialized per call
+    (`localCheckpoint`) — the gate/norm regex stack is the per-row hot
+    cost, and without the materialization Catalyst re-inlines it into
+    every downstream consumer (filter + exact-dedup agg + LSH signature
+    build + each label-propagation round re-evaluate it: measured 6.4 s vs
+    3.5 s at sf0.1). Stage 3 is one hash-partition shuffle on the
+    normalized-text key; stage 4 is the banded LSH join (never all-pairs,
+    text stripped from the shuffled pair set) plus size-gated connected
+    components over the (small) pair graph only — driver union-find below
+    2M edges (the broadcast-side resource contract), distributed min-label
+    propagation above. Total: ~2 shuffles over the full corpus regardless
+    of corpus size. At 100 TB the checkpoint becomes a parquet
+    materialization of the scored corpus — still the right plan: every
+    stage after the scan reads the 4-column scored projection, not the raw
+    corpus."""
     from dmp_crawler_spark.operators import dedup as dd
 
     # the sf documents table is a single parquet split at bench scale —
@@ -618,10 +619,9 @@ def corpus_clean(spark, d):
 
 
 def _scored(docs):
-    """The persisted scored projection (doc_id, text, quality, lang_pred,
-    norm) both cleaning pipelines gate and dedup on."""
-    from pyspark import StorageLevel
-
+    """The scored projection (doc_id, text, quality, lang_pred, norm) both
+    cleaning pipelines gate and dedup on, materialized per call
+    (`localCheckpoint`): a new RDD no later call can match."""
     c = F.col("text")
     return docs.select(
         "doc_id",
@@ -629,7 +629,7 @@ def _scored(docs):
         TS.quality_score(c).alias("quality"),
         TS.detect_lang(c).alias("lang_pred"),
         TS.norm_text(c).alias("norm"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
 
 
 def _gate_and_dedup(scored, *extra_gates):
@@ -692,16 +692,15 @@ def corpus_clean_v2(spark, d):
     near-dup suppression. This is corpus_clean extended with the round-5
     stages — the shape a Dolma/CCNet-class 100-TB run actually executes.
 
-    Scale shape: the line-dedup + scrub prefix is persisted once (the §2j
-    materialization contract — every later stage reads the 2-column
-    cleaned corpus, not the raw scan, and the scored projection is
-    persisted again after the regex stack for the same reason); the
-    repetition gate joins per-doc stats on the skew-free id; exact dedup
-    is one norm-key shuffle; near-dup is the banded LSH join + size-gated
-    connected components. Nothing shuffles document text except the
-    line-dedup norm join (AQE skew-split) and the scored persist."""
-    from pyspark import StorageLevel
-
+    Scale shape: the line-dedup + scrub prefix is materialized per call
+    (`localCheckpoint`, the §2j materialization contract — every later
+    stage reads the 2-column cleaned corpus, not the raw scan, and the
+    scored projection is materialized again after the regex stack for the
+    same reason); the repetition gate joins per-doc stats on the skew-free
+    id; exact dedup is one norm-key shuffle; near-dup is the banded LSH
+    join + size-gated connected components. Nothing shuffles document text
+    except the line-dedup norm join (AQE skew-split) and the scored
+    checkpoint."""
     from dmp_crawler_spark.operators import dedup as dd
 
     docs = dd._widen_scan(_t(spark, d, "documents").select("doc_id", "text"))
@@ -714,7 +713,7 @@ def corpus_clean_v2(spark, d):
     )
     scrubbed = TS.pii_scrub(ld).select(
         "doc_id", F.col("clean_text").alias("text")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     rep = TS.repetition_stats(scrubbed)
     return _gate_and_dedup(
         _scored(scrubbed).join(

@@ -159,7 +159,7 @@ class CrawlEngine:
         self.spark = spark
         self.state_dir = state_dir
         self.fetcher = fetcher
-        self.site_rules = site_rules.cache()
+        self.site_rules = site_rules
         self._rule_rows: list | None = None  # compiled (regex, score) chain
         self.robots = robots
         self.respect_robots = respect_robots

@@ -296,9 +296,7 @@ def unigram_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     BROADCAST vocabulary map-side, then partially aggregates
     (id, Σ ln p, count) before the only other exchange — token
     instances never ride a shuffle. The broadcast is the resource
-    contract: a unigram vocab is ~10⁶-10⁸ rows; for a model too big to
-    broadcast, swap the join for a shuffle join on token (AQE handles
-    the Zipf-head skew) — the rest of the plan is unchanged.
+    contract: a unigram vocab is ~10⁶-10⁸ rows.
     """
     c = _c(text_col)
     toks = F.filter(

@@ -16,57 +16,11 @@ DataFrames; everything except the hash math is built-in Column expressions
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-import threading
-
 from dmp_crawler_spark.functions.textstats import doc_fingerprint, shingles
-
-# last cached intermediate DataFrame PER (SparkSession, slot), evicted on
-# the next call from the same session (ADVICE r02: a single module global
-# let one session's call unpersist a cache another session still used, and
-# pinned a DataFrame of a possibly-stopped session). Slots: "sig" is the
-# minhash-signature table; "cand" is the LSH candidate-pair set (tiny but
-# referenced 3× in ngram_jaccard_pairs' plan — exact-jaccard joins + the
-# candidate-doc semi-join — so an uncached plan recomputes the banded
-# self-join three times per action).
-# value = (session, DataFrame): the strong session ref means id() cannot
-# be reused while an entry lives (no dead-session aliasing), and the purge
-# below bounds the cache to live sessions (ADVICE r03: entries for stopped
-# sessions leaked for the process lifetime).
-_SIG_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-_SIG_CACHE_LOCK = threading.Lock()
-
-
-def _session_stopped(sess: SparkSession) -> bool:
-    try:
-        return sess._sc._jsc.sc().isStopped()
-    except Exception:
-        return True  # no reachable JVM context == unusable == stopped
-
-
-def _cache_evicting(df: DataFrame, slot: str) -> DataFrame:
-    """cache() `df` and evict the previous cached plan in this session's
-    `slot` — unless the new plan is semantically identical, in which case
-    Spark's cache manager shares one entry and unpersisting the old handle
-    would evict the data the new call is about to reuse."""
-    df = df.cache()
-    sess = df.sparkSession
-    skey = (id(sess), slot)
-    with _SIG_CACHE_LOCK:
-        for k in [k for k, (s, _) in _SIG_CACHE.items() if _session_stopped(s)]:
-            _SIG_CACHE.pop(k, None)
-        prev = _SIG_CACHE.get(skey)
-        if prev is not None:
-            try:
-                if not df.sameSemantics(prev[1]):
-                    prev[1].unpersist(blocking=False)
-            except Exception:
-                pass
-        _SIG_CACHE[skey] = (sess, df)
-    return df
 
 
 def _widen_scan(df: DataFrame) -> DataFrame:
@@ -181,15 +135,7 @@ def minhash_lsh_pairs(
     distinct pair set afterwards. Hot buckets are exact-dup clusters,
     handled upstream by exact_dedup."""
     rows_per_band = num_hashes // bands
-    # bound cache growth across repeated calls in a long-lived session:
-    # evict the previous call's signature cache (ADVICE r01) unless the
-    # plan is identical (e.g. ngram_jaccard_pairs right after
-    # minhash_lsh_pairs with the same params). Keyed by session and
-    # lock-guarded so concurrent sessions never evict each other's cache
-    # (ADVICE r02).
-    sig = _cache_evicting(
-        minhash_signatures(docs, id_col, text_col, num_hashes, k_shingle), "sig"
-    )
+    sig = minhash_signatures(docs, id_col, text_col, num_hashes, k_shingle)
     banded = sig.select(
         "id",
         F.explode(
@@ -487,12 +433,12 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         threshold: float = 0.5, **lsh_kw) -> DataFrame:
     # the candidate set is tiny (LSH survivors) but appears three times in
     # the final plan (the exact-jaccard join + both sides of the
-    # candidate-doc union below) — cache it so the banded self-join runs
-    # once per action instead of three times
-    cand = _cache_evicting(
-        minhash_lsh_pairs(docs, id_col, text_col, k_shingle=k_shingle, **lsh_kw),
-        "cand",
-    )
+    # candidate-doc union below) — checkpoint it locally so the banded
+    # self-join runs once per action instead of three times; the RDD is
+    # new per call, so no later call can match it
+    cand = minhash_lsh_pairs(
+        docs, id_col, text_col, k_shingle=k_shingle, **lsh_kw
+    ).localCheckpoint(eager=False)
     # exact shingle sets ONLY for docs that appear in a candidate pair:
     # the full-corpus shingle projection is O(corpus) split/transform
     # work, while the candidate id set is the (tiny) LSH survivor set —
@@ -503,17 +449,17 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         .unionByName(cand.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    # sh appears on BOTH sides of the exact-jaccard join below; uncached,
-    # the shingle projection + semi-join runs twice per action (measured
-    # ~2× the whole query's warm cost at sf0.1). The set is tiny —
-    # candidate docs only — so cache it like cand
-    sh = _cache_evicting(
+    # sh appears on BOTH sides of the exact-jaccard join below; without a
+    # materialization the shingle projection + semi-join runs twice per
+    # action (measured ~2× the whole query's warm cost at sf0.1). The set
+    # is tiny — candidate docs only — so checkpoint it locally like cand
+    sh = (
         docs.select(F.col(id_col).alias("id"), text_col)
         .join(ids, "id", "left_semi")
         .select(
             "id", F.array_distinct(shingles(text_col, k_shingle)).alias("sh")
-        ),
-        "sh",
+        )
+        .localCheckpoint(eager=False)
     )
     j = (
         cand.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")

@@ -218,27 +218,30 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
 
 def _wav_features(payload: bytes) -> np.ndarray:
     """REAL feature vector from a decoded WAV: header fields, EXACT
-    per-channel sums (|sum| < 2^24, exact in float32 — no rounding parity
-    risk for the SQL oracle), min/max of channel 0, and first/second/last
+    per-channel sums (a float32 slot holds them exactly only while
+    |sum| < 2^24, so a larger sum raises ValueError instead of rounding
+    away from the SQL oracle), min/max of channel 0, and first/second/last
     sample probes per channel — the probes make frame interleaving
     load-bearing, so a channel swap or frame-order bug fails the oracle,
     not just a unit test. Mono leaves the channel-1 slots at 0."""
     smp, sr, bits = decode_wav(payload)
     n, nch = smp.shape
-    s0 = smp[:, 0].astype(np.int64)
+    sums = smp.astype(np.int64).sum(axis=0)
+    if np.abs(sums).max() >= 1 << 24:
+        raise ValueError(f"channel sum {sums.tolist()} not exact in float32")
+    s0 = smp[:, 0]
     out = np.zeros(FEATURE_DIM, dtype=np.float32)
     out[0:4] = [sr, nch, n, bits]
-    out[4] = s0.sum()
+    out[4] = sums[0]
     out[6] = s0.min()
     out[7] = s0.max()
     out[8] = s0[0]
     out[9] = s0[1] if n > 1 else 0
     out[10] = s0[-1]
     if nch > 1:
-        s1 = smp[:, 1].astype(np.int64)
-        out[5] = s1.sum()
-        out[11] = s1[0]
-        out[12] = s1[-1]
+        out[5] = sums[1]
+        out[11] = smp[0, 1]
+        out[12] = smp[-1, 1]
     return out
 
 

@@ -1,6 +1,6 @@
 """Driver-contract self-check: run every queries() entry and compare it
-against oracle_sql() via DuckDB (row count + column names + order-
-insensitive values), mimicking the driver's CORRECTNESS gate.
+against oracle_sql() via DuckDB (column names + per-column dtype family +
+row count + order-insensitive values).
 
 Usage: PYTHONPATH=/root/repo python scripts/check_oracle.py [sf_dir]
 """
@@ -43,6 +43,20 @@ def normalize(df):
     return list(df.columns), rows
 
 
+def _family(col) -> str:
+    return {"i": "int", "u": "int", "f": "float", "b": "bool"}.get(col.dtype.kind, "other")
+
+
+def dtype_mismatches(sdf, odf) -> list[str]:
+    """Columns whose dtype family differs between the two frames: the value
+    comparison stringifies, so without this an int column replayed as a
+    float (or a HUGEINT as an object) compares equal."""
+    return [
+        f"{c} {_family(sdf[c])} != {_family(odf[c])}"
+        for c in sdf.columns if _family(sdf[c]) != _family(odf[c])
+    ]
+
+
 def main(sf_dir: str) -> int:
     spark = get_spark(master="local[8]", app_name="oracle_check", shuffle_partitions=8)
     con = duckdb.connect()
@@ -74,6 +88,9 @@ def main(sf_dir: str) -> int:
         ocols, orows = normalize(odf)
         if scols != ocols:
             print(f"FAIL  {name}: columns {scols} != {ocols}")
+            n_fail += 1
+        elif bad := dtype_mismatches(sdf, odf):
+            print(f"FAIL  {name}: dtype family {bad}")
             n_fail += 1
         elif len(srows) != len(orows):
             print(f"FAIL  {name}: rowcount {len(srows)} != {len(orows)}")

@@ -16,3 +16,10 @@ def spark():
     s = get_spark(master="local[4]", app_name="dmp_crawler_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def sf_dir():
+    """The sf0.01 tables vendored with the benchmark; tests only read them."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.path.join(root, "benchmark", "data", "sf0.01")

@@ -3,6 +3,7 @@ bloom-shard dedup, robots evaluation, politeness budgets, checkpoint resume."""
 
 from __future__ import annotations
 
+import inspect
 import os
 
 import pytest
@@ -119,6 +120,23 @@ def test_resume_from_checkpoint(spark, corpus_path, tmp_path):
     a = {r["url"] for r in full.seen_df(k).collect()}
     b = {r["url"] for r in resumed.seen_df(k).collect()}
     assert a == b
+
+
+@pytest.mark.parametrize("gates", [
+    {k: inspect.signature(CrawlEngine).parameters[k].default
+     for k in ("bloom_min_seen", "lsm_min_frontier")},
+    {"bloom_min_seen": 0, "lsm_min_frontier": 0},
+], ids=["default_gates", "gates_at_0"])
+def test_crawl_leaves_no_cache(spark, corpus_path, tmp_path, gates):
+    """Engine construction and every step release what they cache: the
+    per-iteration persists are unpersisted before step() returns and the
+    site rules are never cached, so the session's CacheManager is empty
+    after a run."""
+    spark.catalog.clearCache()
+    engine = _mk_engine(spark, corpus_path, tmp_path, **gates)
+    engine.init_from_seeds(spark.createDataFrame([(s, "") for s in _seeds()], "seed string, site string"))
+    engine.run(max_iters=2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_failed_urls_retry_then_fail(spark, corpus_path, tmp_path):

@@ -95,6 +95,42 @@ def test_simhash_near_pairs(docs):
     assert (1, 3) in got
 
 
+def test_simhash_default_matches_python_xxh64(spark, sf_dir):
+    """The production simhash (library-default xxhash64, 64 bits) has no
+    SQL oracle, so replay it in pure Python on the sf0.01 documents:
+    Java `\\s` token split, Spark's seed-42 xxhash64 per token, bit i set
+    when Σ±1 > 0. Signatures and the hamming-≤3 pair set must both match
+    the library's output exactly."""
+    import re
+
+    import __spark_entry__ as entrymod
+    from dmp_crawler_spark.functions.pyhash import spark_xxhash64
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    want = {}
+    for r in docs.collect():
+        sums = [0] * 64
+        for tok in re.split(r"[ \t\n\x0b\f\r]+", r["text"].lower()):
+            h = spark_xxhash64(tok)
+            for i in range(64):
+                sums[i] += 1 if (h >> i) & 1 else -1
+        sig = sum(1 << i for i in range(64) if sums[i] > 0)
+        want[r["doc_id"]] = sig - (1 << 64) if sig >= 1 << 63 else sig
+    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
+    assert got == want
+    ids = sorted(want)
+    ham = lambda a, b: ((want[a] ^ want[b]) & ((1 << 64) - 1)).bit_count()  # noqa: E731
+    want_pairs = {
+        (a, b, ham(a, b))
+        for i, a in enumerate(ids) for b in ids[i + 1:] if ham(a, b) <= 3
+    }
+    got_pairs = {
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in entrymod.simhash_pairs_default(spark, sf_dir).collect()
+    }
+    assert got_pairs == want_pairs and want_pairs
+
+
 def test_ngram_jaccard(docs):
     pairs = dedup.ngram_jaccard_pairs(
         docs, k_shingle=3, threshold=0.3, num_hashes=32, bands=16

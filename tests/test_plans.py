@@ -239,3 +239,21 @@ def test_pack_sequences_single_shuffle_no_global_sort(spark):
     out = TR.pack_sequences(docs, capacity=16)
     assert inspect.count_exchanges(out) == 1
     assert "rangepartitioning" not in inspect.physical_plan(out).lower()
+
+
+@pytest.mark.parametrize("name", [
+    "minhash_pairs", "ngram_jaccard", "dedup_clusters",
+    "corpus_clean", "corpus_clean_v2",
+])
+def test_no_cache_outlives_query(spark, sf_dir, name):
+    """A query materializes its intermediates per call: after its action
+    the session's CacheManager is empty, and a second call's plan reads
+    nothing an earlier call left behind (no InMemoryRelation)."""
+    import __spark_entry__ as entrymod
+
+    q = entrymod.queries()[name]
+    spark.catalog.clearCache()
+    q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    plan = q(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan

@@ -122,3 +122,14 @@ def test_wav_meta_duration(spark):
         assert r["kind"] == "audio" and r["mime"] == "audio/wav"
         assert r["sample_rate"] == sr
         assert r["duration_ms"] == smp.shape[0] * 1000 // sr
+
+
+def test_wav_channel_sum_bound():
+    """Channel sums ride float32 slots, exact only while |sum| < 2^24: a
+    full-scale 16-bit payload one frame past the bound raises instead of
+    rounding, and one just under it keeps the exact sum."""
+    full = lambda n: np.full((n, 1), 32767, dtype=np.int16)  # noqa: E731
+    with pytest.raises(ValueError):
+        multimodal._wav_features(multimodal.encode_wav(full(513), 8000))
+    out = multimodal._wav_features(multimodal.encode_wav(full(512), 8000))
+    assert out[4] == 512 * 32767
