@@ -1,4 +1,4 @@
-"""Partitioned bloom-filter URL-seen shards (the north-rule fast path).
+"""Partitioned, layered bloom-filter URL-seen shards (the north-rule fast path).
 
 The reference relies on crawler4j's BerkeleyDB DocID server for URL-seen
 dedup (implied by setResumableCrawling, …/main/CrawlerManager.java:83-84).
@@ -14,10 +14,17 @@ candidates into definitely-new (bloom negative — skips the join entirely)
 and maybe-seen (bloom positive — goes through the exact left_anti join).
 False positives only cost an extra join row, never correctness.
 
-Shards are numpy bit arrays built with applyInPandas (one group = one
-shard) and persisted as .npy files + a JSON manifest; executors mmap-load
-and cache shards per process. Double hashing (Kirsch–Mitzenmacher) gives
-k index functions from one xxhash64 value computed JVM-side.
+Each shard is a scalable bloom filter (Almeida et al., *Scalable Bloom
+Filters*, IPL 2007): a list of layers, each a numpy bit array with its own
+capacity and (m, k). `merge_shards` is the only writer: it ORs a batch
+into the shard's last layer while that layer has room, and otherwise
+opens a layer of twice the capacity at half the false-positive rate, so
+a shard's compound FP rate stays within Σ fpp/2^i = 2·fpp however large
+it grows and no maintenance step ever re-reads the seen set. Layers are
+written with applyInPandas (one group = one shard) as .npy files + a JSON
+manifest; executors mmap-load and cache them per process. Double hashing
+(Kirsch–Mitzenmacher) gives k index functions from one xxhash64 value
+computed JVM-side.
 """
 
 from __future__ import annotations
@@ -33,16 +40,17 @@ from pyspark.sql import types as T
 
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
-# per-executor-process shard cache {path: (bits, m, k)}
-_SHARD_CACHE: dict[str, tuple[np.ndarray, int, int]] = {}
+# per-executor-process layer cache {path: bits}
+_SHARD_CACHE: dict[str, np.ndarray] = {}
 
 
 def _params(n_items: int, fpp: float) -> tuple[int, int]:
     n = max(n_items, 16)
     m = int(-n * math.log(fpp) / (math.log(2) ** 2))
-    m = max(128, (m + 63) // 64 * 64)
     k = max(1, round(m / n * math.log(2)))
-    return m, min(k, 16)
+    if k > 16:  # probes capped at 16: widen m so (1 - e^(-kn/m))^k = fpp
+        k, m = 16, math.ceil(-16 * n / math.log1p(-fpp ** (1 / 16)))
+    return max(128, (m + 63) // 64 * 64), k
 
 
 def _positions(h: np.ndarray, m: int, k: int) -> np.ndarray:
@@ -69,8 +77,10 @@ def _test_bits(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("shard", T.IntegerType(), False),
+    T.StructField("layer", T.IntegerType(), False),
     T.StructField("path", T.StringType(), False),
     T.StructField("n_items", T.LongType(), False),
+    T.StructField("cap", T.LongType(), False),
     T.StructField("m_bits", T.LongType(), False),
     T.StructField("k_hashes", T.IntegerType(), False),
 ])
@@ -78,103 +88,59 @@ MANIFEST_SCHEMA = T.StructType([
 
 def build_shards(seen: DataFrame, out_dir: str, n_shards: int,
                  fpp: float = 1e-4, expected_per_shard: int | None = None) -> str:
-    """Build bloom shards from the exact seen table; returns manifest path.
-
-    seen must carry (url_hash long, host_hash long). One applyInPandas
-    group per shard → one .npy file; the manifest (written by the driver
-    from the returned rows) is the atomic commit point.
-
-    n_shards must be a power of two so the JVM-side pmod(signed long) and
-    the numpy uint64-mod in prefilter() agree on shard ids.
-    """
-    if n_shards & (n_shards - 1):
-        raise ValueError(f"n_shards must be a power of two, got {n_shards}")
-    os.makedirs(out_dir, exist_ok=True)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        hashes = pdf["url_hash"].values.astype(np.int64).view(np.uint64)
-        n = expected_per_shard or len(hashes)
-        m, k = _params(max(n, len(hashes)), fpp)
-        bits = np.zeros(m >> 6, dtype=np.uint64)
-        _set_bits(bits, _positions(hashes, m, k))
-        path = os.path.join(out_dir, f"shard_{shard:05d}.npy")
-        np.save(path, bits, allow_pickle=False)
-        return pd.DataFrame({
-            "shard": [shard], "path": [path], "n_items": [len(hashes)],
-            "m_bits": [m], "k_hashes": [k],
-        })
-
-    shards = (
-        seen.withColumn("shard", F.pmod("host_hash", F.lit(n_shards)).cast("int"))
-        .select("shard", "url_hash")
-        .groupBy("shard")
-        .applyInPandas(build, MANIFEST_SCHEMA)
-        .collect()
-    )
-    manifest = {
-        "n_shards": n_shards,
-        "fpp": fpp,
-        "shards": {str(r["shard"]): {
-            "path": r["path"], "n_items": r["n_items"],
-            "m_bits": r["m_bits"], "k_hashes": r["k_hashes"],
-        } for r in shards},
-    }
-    mpath = os.path.join(out_dir, "manifest.json")
-    tmp = mpath + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, mpath)
-    return mpath
+    """Build bloom shards from the exact seen table (a merge into no
+    previous state); returns the manifest path."""
+    return _merge(seen, None, out_dir, n_shards, fpp, expected_per_shard)
 
 
 def merge_shards(new_seen: DataFrame, prev_manifest_path: str | None,
                  out_dir: str, n_shards: int, fpp: float = 1e-4,
-                 expected_per_shard: int = 1 << 20) -> str:
-    """Incremental bloom update: build bits for THIS batch's hashes and OR
-    them into the previous shard files (same m,k — fixed by
-    expected_per_shard so merges stay compatible across iterations).
-    O(new rows) per iteration instead of O(all seen). Returns new manifest.
+                 expected_per_shard: int | None = None) -> str:
+    """OR this batch's hashes into each shard's layers; returns the new
+    manifest path. O(new rows): the seen set is never read.
 
-    Shards never shrink; when n_items approaches expected_per_shard the
-    caller should trigger a full rebuild with a larger expected size (the
-    FP rate degrades gracefully, never correctness — positives just fall
-    through to the exact anti-join)."""
+    new_seen must carry (url_hash long, host_hash long). Per shard, the
+    batch goes into the last layer if it still fits under that layer's
+    cap; otherwise a new layer i opens with cap = max(2 × previous cap,
+    len(batch)) sized at fpp / 2**i (expected_per_shard stands in for
+    the previous cap of a shard's first layer; None sizes it to the
+    batch). Layer files are written under out_dir, which the caller
+    versions per iteration; the manifest (written by the driver from the
+    returned rows) is the atomic commit point, and untouched layers keep
+    their previous files.
+
+    n_shards must be a power of two so the JVM-side pmod(signed long) and
+    the numpy uint64-mod in prefilter() agree on shard ids."""
     if n_shards & (n_shards - 1):
         raise ValueError(f"n_shards must be a power of two, got {n_shards}")
     os.makedirs(out_dir, exist_ok=True)
-    prev: dict = {"shards": {}}
-    if prev_manifest_path and os.path.exists(prev_manifest_path):
+    prev_shards: dict = {}
+    if prev_manifest_path is not None:
         with open(prev_manifest_path) as f:
-            prev = json.load(f)
-    m, k = _params(expected_per_shard, fpp)
-    prev_shards = prev.get("shards", {})
+            prev_shards = json.load(f)["shards"]
+    first_cap = expected_per_shard or 0
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
         hashes = pdf["url_hash"].values.astype(np.int64).view(np.uint64)
-        meta = prev_shards.get(str(shard))
-        n_prev = 0
-        if meta is not None:
-            if meta["m_bits"] != m or meta["k_hashes"] != k or meta["path"] == "DEGRADED":
-                # incompatible previous state: dropping its bits would create
-                # FALSE NEGATIVES (seen URLs re-crawled). Mark degraded: the
-                # prefilter sends the whole shard to the exact anti-join.
-                return pd.DataFrame({
-                    "shard": [shard], "path": ["DEGRADED"],
-                    "n_items": [meta["n_items"] + len(hashes)],
-                    "m_bits": [m], "k_hashes": [k],
-                })
-            bits = np.load(meta["path"], allow_pickle=False).copy()
-            n_prev = meta["n_items"]
+        layers = prev_shards.get(str(shard), [])
+        last = layers[-1] if layers else None
+        if last is not None and last["n_items"] + len(hashes) <= last["cap"]:
+            i, cap, n_prev = len(layers) - 1, last["cap"], last["n_items"]
+            m, k = last["m_bits"], last["k_hashes"]
+            bits = np.load(last["path"], allow_pickle=False).copy()
         else:
+            i, n_prev = len(layers), 0
+            cap = max(2 * last["cap"] if last else first_cap, len(hashes))
+            m, k = _params(cap, fpp / 2 ** i)
             bits = np.zeros(m >> 6, dtype=np.uint64)
         _set_bits(bits, _positions(hashes, m, k))
-        path = os.path.join(out_dir, f"shard_{shard:05d}.npy")
+        path = os.path.join(out_dir, f"shard_{shard:05d}_{i:02d}.npy")
         np.save(path, bits, allow_pickle=False)
         return pd.DataFrame({
-            "shard": [shard], "path": [path],
-            "n_items": [n_prev + len(hashes)], "m_bits": [m], "k_hashes": [k],
+            "shard": [shard], "layer": [i], "path": [path],
+            "n_items": [n_prev + len(hashes)], "cap": [cap],
+            "m_bits": [m], "k_hashes": [k],
         })
 
     rows = (
@@ -184,38 +150,38 @@ def merge_shards(new_seen: DataFrame, prev_manifest_path: str | None,
         .applyInPandas(build, MANIFEST_SCHEMA)
         .collect()
     )
-    shards = dict(prev_shards)  # untouched shards keep their old files
+    shards = {sid: list(layers) for sid, layers in prev_shards.items()}
     for r in rows:
-        shards[str(r["shard"])] = {
-            "path": r["path"], "n_items": r["n_items"],
+        shards.setdefault(str(r["shard"]), [])[r["layer"]:] = [{
+            "path": r["path"], "n_items": r["n_items"], "cap": r["cap"],
             "m_bits": r["m_bits"], "k_hashes": r["k_hashes"],
-        }
+        }]
     manifest = {"n_shards": n_shards, "fpp": fpp, "shards": shards}
     mpath = os.path.join(out_dir, "manifest.json")
     tmp = mpath + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
     os.replace(tmp, mpath)
-    # bust the per-process cache for rewritten files (same-path reuse across
-    # iterations isn't possible — paths are versioned — but be safe)
-    for r in rows:
-        _SHARD_CACHE.pop(r["path"], None)
     return mpath
 
 
-def _load_shard(path: str, m: int, k: int) -> tuple[np.ndarray, int, int]:
-    cached = _SHARD_CACHE.get(path)
-    if cached is None:
-        bits = np.load(path, allow_pickle=False, mmap_mode="r")
-        cached = (bits, m, k)
-        _SHARD_CACHE[path] = cached
-    return cached
+# build_shards' own reference: rebinding bloom.merge_shards (a tracing
+# wrapper) must not make a build also count as a merge
+_merge = merge_shards
+
+
+def _load_bits(path: str) -> np.ndarray:
+    bits = _SHARD_CACHE.get(path)
+    if bits is None:
+        bits = _SHARD_CACHE[path] = np.load(path, allow_pickle=False, mmap_mode="r")
+    return bits
 
 
 def prefilter(candidates: DataFrame, manifest_path: str | None) -> DataFrame:
-    """Tag candidates with maybe_seen: false ⇒ definitely new (bloom
-    negative), true ⇒ must go through the exact anti-join. Map-side only —
-    no shuffle. candidates must carry (url_hash, host_hash).
+    """Tag candidates with maybe_seen: false ⇒ definitely new (negative
+    in every layer of its shard), true ⇒ must go through the exact
+    anti-join. Map-side only — no shuffle. candidates must carry
+    (url_hash, host_hash).
 
     Implemented as a scalar Arrow pandas_udf over ONLY the two hash
     columns: the old mapInPandas form shipped every candidate column
@@ -238,15 +204,13 @@ def prefilter(candidates: DataFrame, manifest_path: str | None) -> DataFrame:
         maybe = np.ones(len(uh_s), dtype=bool)
         uh = uh_s.values.astype(np.int64).view(np.uint64)
         for sid in np.unique(shard_ids):
-            meta = shards_meta.get(str(int(sid)))
             mask = shard_ids == sid
-            if meta is None:
-                maybe[mask] = False  # empty shard: nothing ever seen there
-                continue
-            if meta["path"] == "DEGRADED":
-                continue  # maybe stays True: exact join decides
-            bits, m, k = _load_shard(meta["path"], meta["m_bits"], meta["k_hashes"])
-            maybe[mask] = _test_bits(np.asarray(bits), _positions(uh[mask], m, k))
+            u = uh[mask]
+            hit = np.zeros(len(u), dtype=bool)  # no layers: nothing seen there
+            for layer in shards_meta.get(str(int(sid)), []):
+                bits = np.asarray(_load_bits(layer["path"]))
+                hit |= _test_bits(bits, _positions(u, layer["m_bits"], layer["k_hashes"]))
+            maybe[mask] = hit
         return pd.Series(maybe)
 
     return candidates.withColumn("maybe_seen", check("url_hash", "host_hash"))

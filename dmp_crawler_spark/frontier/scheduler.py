@@ -208,8 +208,10 @@ class CrawlEngine:
         # shard merge (measured at the bench's ~100k-seen scale: ~1 s/iter
         # prefilter + ~0.3 s/iter merge vs ~0.3 s/iter exact join). Once
         # seen_total crosses the threshold the shards are built ONCE from
-        # the exact seen set and maintained incrementally (O(new)/iter)
-        # from then on — the steady-state 10^10-URL plan is unchanged.
+        # the exact seen set; from then on every iteration only merges its
+        # new rows (O(new)/iter), each shard growing by layers sized from
+        # bloom_expected_per_shard — the steady-state 10^10-URL plan is
+        # unchanged.
         self.bloom_min_seen = bloom_min_seen
         # one or several enrichment stages (the reference's Jingdong page
         # does BOTH a price and a comment-count API call per product —
@@ -420,7 +422,6 @@ class CrawlEngine:
             "seen_upto": 0,
             "seen_compact": None,
             "bloom_manifest": manifest,
-            "bloom_expected": self.bloom_expected_per_shard,
             "pages_crawled_total": 0,
             "seen_total": n_seeds,
             "metrics": {"frontier_size": n_seeds},
@@ -706,23 +707,19 @@ class CrawlEngine:
                 compact = {"path": cpath, "upto": k}
                 _mark("seen_compact")
 
-        # incremental bloom: O(new rows), OR-merged into the prior shards.
-        # Below bloom_min_seen no shards exist (the exact hash anti-join
-        # wins at that size — see __init__); the first iteration at or
-        # past the threshold builds every shard from the exact seen set,
-        # sized with power-of-two headroom, and later iterations return
-        # to the O(new) incremental merge.
+        # incremental bloom: O(new rows), OR-merged into each shard's last
+        # layer (merge_shards opens a larger layer when one fills). Below
+        # bloom_min_seen no shards exist (the exact hash anti-join wins at
+        # that size — see __init__); the first iteration at or past the
+        # threshold builds every shard once from the exact seen set, and
+        # later iterations only merge.
         manifest = ck.get("bloom_manifest")
-        bloom_expected = ck.get("bloom_expected", self.bloom_expected_per_shard)
         if manifest is None and ck.get("seen_total", 0) >= self.bloom_min_seen:
-            target = max(1, 2 * ck["seen_total"] // self.n_bloom_shards)
-            while bloom_expected < target:
-                bloom_expected *= 2
             manifest = bloom.build_shards(
                 self.seen_df(k, compact),
                 self._p("bloom", f"v{k:06d}"),
                 self.n_bloom_shards,
-                expected_per_shard=bloom_expected,
+                expected_per_shard=self.bloom_expected_per_shard,
             )
             _mark("bloom_build")
         elif manifest is not None:
@@ -730,32 +727,11 @@ class CrawlEngine:
                 self.spark.read.schema(SEEN_SCHEMA).parquet(
                     self._p("seen", f"iter={k:06d}")
                 ),
-                ck.get("bloom_manifest"),
+                manifest,
                 self._p("bloom", f"v{k:06d}"),
                 self.n_bloom_shards,
-                expected_per_shard=bloom_expected,
+                expected_per_shard=self.bloom_expected_per_shard,
             )
-            # full-rebuild trigger (promised by merge_shards' contract):
-            # once any shard holds more items than the merge-time sizing
-            # assumed, its FP rate is past nominal — rebuild every shard
-            # from the exact seen set at the next power-of-two size and
-            # carry the new size forward in the checkpoint so later merges
-            # stay m/k-compatible.
-            with open(manifest) as mf:
-                man = json.load(mf)
-            max_items = max(
-                (s["n_items"] for s in man["shards"].values()), default=0
-            )
-            if max_items > bloom_expected:
-                while bloom_expected <= max_items:
-                    bloom_expected *= 2
-                manifest = bloom.build_shards(
-                    self.seen_df(k, compact),
-                    self._p("bloom", f"v{k:06d}_rebuild"),
-                    self.n_bloom_shards,
-                    expected_per_shard=bloom_expected,
-                )
-                _mark("bloom_rebuild")
         _mark("bloom_merge")
 
         # per-partition lineage metrics (north rule): admitted/new/frontier
@@ -860,7 +836,6 @@ class CrawlEngine:
             "seen_upto": k,
             "seen_compact": compact,
             "bloom_manifest": manifest,
-            "bloom_expected": bloom_expected,
             "pages_crawled_total": ck["pages_crawled_total"] + n_admitted,
             "seen_total": ck.get("seen_total", 0) + n_new,
             "metrics": metrics,

@@ -4,8 +4,10 @@ bloom-shard dedup, robots evaluation, politeness budgets, checkpoint resume."""
 from __future__ import annotations
 
 import inspect
+import json
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -552,6 +554,12 @@ def test_frontier_lsm_gate_crossing(spark, corpus_path, tmp_path):
     assert pend["lsm"] == pend["fold"] == pend["cross"]
 
 
+def _bloom_shards(ck) -> dict:
+    """{shard id: [layer meta, …]} of the checkpoint's bloom manifest."""
+    with open(ck["bloom_manifest"]) as f:
+        return json.load(f)["shards"]
+
+
 def test_bloom_size_gate_crossing(spark, corpus_path, tmp_path):
     """Round-3 bloom gate: below bloom_min_seen total seen rows the engine
     skips the prefilter UDF and all shard maintenance (the exact hash
@@ -568,8 +576,9 @@ def test_bloom_size_gate_crossing(spark, corpus_path, tmp_path):
     ck = gated.last_checkpoint()
     assert ck["seen_total"] >= 30
     assert ck["bloom_manifest"] is not None  # built once at the crossing
-    # sized to the live seen set with headroom, carried in the checkpoint
-    assert ck["bloom_expected"] * gated.n_bloom_shards >= ck["seen_total"]
+    # every seen row is in exactly one layer of its shard
+    layers = [layer for ls in _bloom_shards(ck).values() for layer in ls]
+    assert sum(layer["n_items"] for layer in layers) == ck["seen_total"]
 
     ref = _mk_engine(spark, corpus_path, tmp_path / "ref")
     ref.init_from_seeds(sdf)
@@ -577,11 +586,12 @@ def test_bloom_size_gate_crossing(spark, corpus_path, tmp_path):
     assert _visit_sets(ref) == _visit_sets(gated)
 
 
-def test_bloom_full_rebuild_trigger(spark, corpus_path, tmp_path):
-    """Verdict r02 item 8: when a shard outgrows the merge-time sizing,
-    the engine rebuilds every shard at the next power-of-two size (carried
-    in the checkpoint) — and the crawl stays exact throughout (bloom FPs
-    only ever fall through to the exact anti-join)."""
+def test_bloom_layer_growth(spark, corpus_path, tmp_path):
+    """A shard that outgrows its first layer (sized by
+    bloom_expected_per_shard) grows by layers through the O(new) merge
+    alone — no layer ever holds more than its cap — and the crawl stays
+    exact throughout (bloom FPs only ever fall through to the exact
+    anti-join)."""
     seeds = _seeds()
     engine = _mk_engine(
         spark, corpus_path, tmp_path, bloom_expected_per_shard=16
@@ -591,7 +601,11 @@ def test_bloom_full_rebuild_trigger(spark, corpus_path, tmp_path):
     )
     engine.run(max_iters=3)
     ck = engine.last_checkpoint()
-    assert ck["bloom_expected"] > 16  # the trigger fired and doubled
+    shards = _bloom_shards(ck)
+    assert max(len(ls) for ls in shards.values()) >= 2
+    layers = [layer for ls in shards.values() for layer in ls]
+    assert all(layer["n_items"] <= layer["cap"] for layer in layers)
+    assert sum(layer["n_items"] for layer in layers) == ck["seen_total"]
 
     sim = FrontierSimulator(N_URLS, _rules(), per_host_budget=3)
     sim.init_from_seeds(seeds)
@@ -600,6 +614,59 @@ def test_bloom_full_rebuild_trigger(spark, corpus_path, tmp_path):
     for it, url in sim.state.visit_order:
         sim_visits.setdefault(it, set()).add(url)
     assert _visit_sets(engine) == sim_visits
+
+
+def test_bloom_layer_fp_rate(spark, tmp_path):
+    """Each layer i of a scalable shard holds its nominal false-positive
+    rate fpp / 2**i, so the shard's compound rate stays within 2·fpp, and
+    no inserted hash is ever reported new. Past the 16-probe cap (from
+    layer 4 at fpp=1e-4) the layers are checked too."""
+    rng = np.random.default_rng(9)
+    fpp = 0.01
+    manifest, inserted = None, []
+    for v, n in enumerate((1000, 2000, 4000, 8000)):
+        batch = [int(h) for h in rng.integers(-2**63, 2**63 - 1, n, dtype=np.int64)]
+        inserted += batch
+        df = spark.createDataFrame(
+            [(h, 7) for h in batch], "url_hash long, host_hash long"
+        )
+        manifest = bloom.merge_shards(
+            df, manifest, str(tmp_path / f"v{v}"), n_shards=4, fpp=fpp,
+            expected_per_shard=1000,
+        )
+    with open(manifest) as f:
+        layers = json.load(f)["shards"][str(7 % 4)]
+    assert [layer["n_items"] for layer in layers] == [1000, 2000, 4000, 8000]
+
+    tagged = bloom.prefilter(
+        spark.createDataFrame([(h, 7) for h in inserted],
+                              "url_hash long, host_hash long"),
+        manifest,
+    )
+    assert tagged.filter(~F.col("maybe_seen")).count() == 0
+
+    probe = rng.integers(-2**63, 2**63 - 1, 400_000, dtype=np.int64).view(np.uint64)
+    probe = probe[~np.isin(probe, np.array(inserted, dtype=np.int64).view(np.uint64))]
+    any_hit = np.zeros(len(probe), dtype=bool)
+    for i, layer in enumerate(layers):
+        bits = np.load(layer["path"], allow_pickle=False)
+        pos = bloom._positions(probe, layer["m_bits"], layer["k_hashes"])
+        hit = bloom._test_bits(bits, pos)
+        assert hit.mean() <= 1.25 * fpp / 2**i, (i, hit.mean())
+        any_hit |= hit
+    assert any_hit.mean() <= 2 * fpp
+
+    # at fpp=1e-4 a layer's rate is too small to probe for; a filled
+    # layer's rate is fill**k (every probe bit set), measured off its bits
+    fpp, n = 1e-4, 20_000
+    for i in range(13):
+        m, k = bloom._params(n, fpp / 2**i)
+        assert k <= 16
+        bits = np.zeros(m >> 6, dtype=np.uint64)
+        hashes = rng.integers(-2**63, 2**63 - 1, n, dtype=np.int64).view(np.uint64)
+        bloom._set_bits(bits, bloom._positions(hashes, m, k))
+        fill = sum(bin(int(w)).count("1") for w in bits) / m
+        assert fill**k <= 1.1 * fpp / 2**i, (i, k, fill**k)
 
 
 def test_py_normalize_url_parity(spark):

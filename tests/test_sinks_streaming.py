@@ -58,11 +58,25 @@ def test_readmit_expired(spark, tmp_path):
     )
     eng.init_from_seeds(seeds)
     eng.run(max_iters=3)
-    crawled_before = eng.crawled_df().count()
-    assert crawled_before > 0
-    # everything crawled ≥1 iteration ago is expired with ttl=1
+    # expected re-admits, derived in Python: every url whose latest crawl
+    # is ≥ ttl=1 iteration old, minus the urls still pending
+    ck = eng.last_checkpoint()
+    k = ck["iter"]
+    latest: dict[str, int] = {}
+    for r in eng.crawled_df().select("url", "crawl_iter").collect():
+        latest[r["url"]] = max(latest.get(r["url"], 0), r["crawl_iter"])
+    assert latest
+    pending = {r["url"] for r in
+               eng.frontier_view(k, ck["frontier_base"]).select("url").collect()}
+    expired = {u for u, it in latest.items() if it <= k - 1} - pending
+    assert expired
+
     n_re = eng.readmit_expired(ttl_iters=1)
-    assert n_re > 0
+    ck = eng.last_checkpoint()
+    view = eng.frontier_view(ck["iter"], ck["frontier_base"])
+    assert n_re == len(expired)
+    assert {r["url"] for r in view.select("url").collect()} == pending | expired
+    assert sum(ck["frontier_shards"].values()) == view.count()
     # re-admitted urls crawl again on the next step
     m = eng.step()
     assert m["admitted"] > 0
