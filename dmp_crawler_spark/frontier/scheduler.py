@@ -61,8 +61,9 @@ FRONTIER_COLS = [
     "url", "host", "host_hash", "depth", "discovery_iter", "score", "retry_count",
 ]
 
-# explicit schema for frontier delta-dir reads (an iteration that
-# discovers nothing writes an empty dir — no footers to infer from)
+# explicit schema for every frontier base and delta read: an iteration
+# that discovers nothing writes an empty dir (no footers to infer from),
+# and inferring from footers costs a Spark job per read
 FRONTIER_SCHEMA = (
     "url string, host string, host_hash long, depth int, "
     "discovery_iter int, score double, retry_count int"
@@ -274,9 +275,9 @@ class CrawlEngine:
         admissions — small enough to broadcast, so the anti-join is
         map-side and the O(frontier) big side never shuffles."""
         base_path, deltas, tombs = self._frontier_dirs(k, base)
-        parts = [self.spark.read.parquet(base_path)] if base_path else []
-        parts += [
-            self.spark.read.schema(FRONTIER_SCHEMA).parquet(d) for d in deltas
+        parts = [
+            self.spark.read.schema(FRONTIER_SCHEMA).parquet(d)
+            for d in ([base_path] if base_path else []) + deltas
         ]
         fr = parts[0]
         for p in parts[1:]:
@@ -390,7 +391,9 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
         )
         fr.write.mode("overwrite").parquet(self._p("frontier", "base_v000000"))
-        fr_w = self.spark.read.parquet(self._p("frontier", "base_v000000"))
+        fr_w = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
+            self._p("frontier", "base_v000000")
+        )
         # per-shard pending counts ride in the checkpoint (O(shards) JSON):
         # iteration metrics update them from the delta/tombstone aggregates
         # instead of re-counting the whole frontier

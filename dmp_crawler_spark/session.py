@@ -80,16 +80,22 @@ def get_spark(
         # BENCH/BASELINE.md §2o) — stalling whole stages for minutes.
         # Measured on the 2M-URL crawl at local[32]: 1,804 → 8,130
         # URLs/s with reuse off (bloom_build phase 184 s → 1.9 s).
-        # Cost is a daemon fork + module re-import per task; our pandas
-        # stages run seconds per task, so it's noise by comparison. On a
-        # real cluster revisit via SPARK_GRAFT_CONF (or the 4.1
+        # Cost is a daemon fork per task plus pyspark's per-task
+        # importlib.invalidate_caches(), which on CPython < 3.13 re-read
+        # every inherited zip archive's directory (the Spark core jar,
+        # pyspark.zip): 160-210 ms before a task's first row, the bulk of a
+        # small prefilter/bloom task (BENCH/BASELINE.md §2x). The preload
+        # daemon below makes that re-read stat-gated; a reused worker
+        # would not avoid it (setup_spark_files runs per task either way).
+        # On a real cluster revisit via SPARK_GRAFT_CONF (or the 4.1
         # spark.python.worker.idleTimeoutSeconds/killOnIdleTimeout
         # reaper) if per-task fork ever shows up in profiles.
         .config("spark.python.worker.reuse", "false")
-        # ...and make no-reuse forks FREE: the preload daemon imports
+        # ...and make no-reuse forks cheap: the preload daemon imports
         # pandas/pyarrow/the extractor stack once, so every per-task fork
         # inherits warm modules copy-on-write instead of re-importing
-        # (~2 s CPU/task; cost the 2M-URL local[8] crawl ~30% throughput).
+        # (~2 s CPU/task; cost the 2M-URL local[8] crawl ~30% throughput),
+        # and stops the per-task zip directory re-reads.
         .config("spark.python.daemon.module", "dmp_crawler_spark.daemon_preload")
     )
     if shuffle_partitions is not None:
