@@ -9,14 +9,23 @@ Design for 10^10 URLs (the north rule):
   - every stage is a DataFrame op partitioned by host (admit window,
     politeness) or url (fetch join, seen anti-join); no driver-side loops
     over rows, only over *iterations*;
-  - URL-seen = append-only `seen` parquet partitions + per-shard bloom
-    files (frontier/bloom.py) so the anti-join input shrinks map-side;
+  - URL-seen = `seen` parquet partitions + per-shard bloom files
+    (frontier/bloom.py) so the anti-join input shrinks map-side. An
+    iteration appends its new URLs as `seen/iter=k`, or, when a seen
+    compaction is due, writes them straight into a fresh baseline
+    `seen/compact_k` = seen(k−1) ∪ new — one write either way;
   - the pending frontier is an LSM log past `lsm_min_frontier`: each
     iteration appends an O(Δ) delta + O(admitted) tombstones and the view
-    is base ∪ deltas − tombstones (broadcast anti-join), folded into a
-    fresh base every `compact_frontier_every` iterations — the loop never
-    rewrites (or counts) the O(frontier) pending set; below the gate the
-    direct fold is the cheaper plan and the engine picks per-iteration;
+    is base ∪ deltas − tombstones (broadcast anti-join). A compaction
+    iteration (every `compact_frontier_every`) is a fold: it writes
+    (view − admitted) ∪ Δ as a fresh base instead of a log, so no
+    iteration appends and then re-reads what it appended. Below the gate
+    every iteration folds (the cheaper plan at that size);
+  - no count job: the step's per-shard counts come from one aggregate
+    over the cached admitted set, the parquet footers of what it wrote,
+    and (only when something missed) the cached misses — the loop never
+    re-reads or counts the O(frontier) pending set; each phase's jobs
+    carry the job group `iter=k:<phase>`;
   - checkpointed per-partition lineage: each iteration commits a JSON
     checkpoint naming the frontier snapshot, the seen partitions, and the
     bloom shard manifest (per-shard files = per-partition state) — crash
@@ -41,6 +50,8 @@ import json
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,6 +99,24 @@ RESULTS_SCHEMA = (
     "url string, rowkey string, family string, cols map<string,string>, "
     "kind string, iter int"
 )
+
+
+def _footer_rows(*dirs: str) -> dict[str, int]:
+    """Rows per partition subdir ('kind=page', 'shard=3') under parquet
+    dirs, summed from their footers: counts what a write produced without
+    a Spark job (on Iceberg the snapshot manifests carry the same counts).
+    Hidden paths ('_temporary', '.crc') are skipped, as Spark's reader
+    skips them."""
+    out: dict[str, int] = {}
+    for d in dirs:
+        for root, subdirs, files in os.walk(d):
+            subdirs[:] = [x for x in subdirs if not x.startswith((".", "_"))]
+            part = os.path.basename(root)
+            for f in files:
+                if f.endswith(".parquet") and not f.startswith((".", "_")):
+                    n = pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+                    out[part] = out.get(part, 0) + n
+    return out
 
 
 class EnrichmentSpec:
@@ -169,10 +198,11 @@ class CrawlEngine:
         self.max_retries = max_retries
         self.n_bloom_shards = n_bloom_shards
         self.bloom_expected_per_shard = bloom_expected_per_shard
-        # fold the per-iteration seen tail into one shard-partitioned
-        # baseline every N iterations so the anti-join plan reads a bounded
-        # dir list (≤ N+1) instead of one dir per iteration ever crawled;
-        # 0 disables compaction
+        # every N iterations the iteration writes its new seen rows into
+        # a fresh shard-partitioned baseline (seen(k−1) ∪ new) instead of
+        # appending, so the anti-join plan reads a bounded dir list (≤ N)
+        # instead of one dir per iteration ever crawled; 0 disables
+        # compaction
         self.compact_seen_every = compact_seen_every
         # the frontier is maintained LSM-style for the same reason: one
         # O(frontier)-row rewrite per iteration is the single biggest
@@ -180,8 +210,9 @@ class CrawlEngine:
         # (new discoveries + requeued retries) and an O(admitted)
         # tombstone dir; the pending view is base ∪ deltas − tombstones
         # (broadcast anti-join on the 128-bit row-version key — map-side,
-        # the big side never shuffles). Every N iterations the view is
-        # folded into a new base, so reads stay bounded at N+1 dirs and
+        # the big side never shuffles). Every N iterations the iteration
+        # folds the view into a new base instead of appending (the same
+        # write as below the gate), so reads stay bounded at N dirs and
         # the full-frontier write cost is amortized to O(frontier/N).
         self.compact_frontier_every = compact_frontier_every
         # LSM only pays once the pending set dwarfs the per-iteration
@@ -191,11 +222,12 @@ class CrawlEngine:
         # rows here (both probes: BENCH/BASELINE.md §2d), putting the local
         # crossover at tens of millions of rows; on replicated DFS the
         # per-row write cost is several × higher, so the default sits
-        # below the local crossover. Below the gate the engine folds
-        # (pending − admitted) ∪ delta into a fresh base directly. Same
-        # gate philosophy as bloom_min_seen: don't pay scale machinery
-        # for state you don't have yet. Semantics are identical either
-        # side (gate-crossing equivalence is pytest-asserted).
+        # below the local crossover. Below the gate every iteration folds
+        # (pending − admitted) ∪ delta into a fresh base — the same branch
+        # a compaction iteration takes above it. Same gate philosophy as
+        # bloom_min_seen: don't pay scale machinery for state you don't
+        # have yet. Semantics are identical either side (gate-crossing
+        # equivalence is pytest-asserted).
         self.lsm_min_frontier = lsm_min_frontier
         # shard-prune the seen side of the J1 anti-join only once the seen
         # set is big enough that skipping shards beats the one extra tiny
@@ -251,7 +283,7 @@ class CrawlEngine:
         self, k: int, base: dict | None
     ) -> tuple[str | None, list[str], list[str]]:
         """(base path, delta dirs, tombstone dirs) making up the pending
-        frontier at iteration k. Bounded by compact_frontier_every + 1 —
+        frontier at iteration k. Bounded by compact_frontier_every —
         the per-iteration plan never grows with crawl age."""
         base_path = None
         start = 1
@@ -270,18 +302,15 @@ class CrawlEngine:
 
     def frontier_view(self, k: int, base: dict | None) -> DataFrame:
         """Pending frontier at iteration k: compaction base ∪ per-iteration
-        deltas, minus the tombstoned (admitted) row versions. The
-        tombstone set is ≤ compact_frontier_every × per-iteration
-        admissions — small enough to broadcast, so the anti-join is
-        map-side and the O(frontier) big side never shuffles."""
+        deltas, minus the tombstoned (admitted) row versions. Base and
+        deltas are one multi-path scan, so the tombstone set (≤
+        compact_frontier_every × per-iteration admissions) is broadcast
+        once and the anti-join is map-side: the O(frontier) big side never
+        shuffles."""
         base_path, deltas, tombs = self._frontier_dirs(k, base)
-        parts = [
-            self.spark.read.schema(FRONTIER_SCHEMA).parquet(d)
-            for d in ([base_path] if base_path else []) + deltas
-        ]
-        fr = parts[0]
-        for p in parts[1:]:
-            fr = fr.unionByName(p)
+        fr = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
+            *([base_path] if base_path else []), *deltas
+        )
         if tombs:
             tomb = self.spark.read.schema(TOMB_SCHEMA).parquet(*tombs)
             # broadcast only while the tombstone files are actually small
@@ -320,7 +349,7 @@ class CrawlEngine:
     def _seen_dirs(self, upto_iter: int, compact: dict | None = None) -> list[str]:
         """Directories making up the seen set through upto_iter: the last
         compaction baseline (if any) plus the per-iteration tail written
-        since it. Bounded by compact_seen_every + 1 — the per-iteration
+        since it. Bounded by compact_seen_every — the per-iteration
         plan never grows with crawl age (round-2 verdict item 8)."""
         start = 0
         dirs: list[str] = []
@@ -335,7 +364,16 @@ class CrawlEngine:
         return dirs
 
     def seen_df(self, upto_iter: int, compact: dict | None = None) -> DataFrame | None:
-        dirs = self._seen_dirs(upto_iter, compact)
+        """Seen set through upto_iter. A compaction iteration writes no
+        seen/iter=k dir, so `compact` defaults to the last checkpoint's
+        baseline pointer."""
+        if compact is None:
+            compact = (self.last_checkpoint() or {}).get("seen_compact")
+            if compact and compact["upto"] > upto_iter:
+                raise ValueError(f"pass iteration {upto_iter}'s seen_compact")
+        return self._read_seen(self._seen_dirs(upto_iter, compact))
+
+    def _read_seen(self, dirs: list[str]) -> DataFrame | None:
         if not dirs:
             return None
         # one read per dir, each with its own basePath: every seen dir is
@@ -350,6 +388,19 @@ class CrawlEngine:
         for df in dfs[1:]:
             out = out.unionByName(df)
         return out
+
+    def _shard_counts(self, df: DataFrame) -> dict[int, int]:
+        """{host-hash shard: rows of df}: one aggregate, O(shards) rows
+        collected."""
+        rows = (
+            df.groupBy(
+                F.pmod("host_hash", F.lit(self.n_bloom_shards))
+                .cast("int").alias("shard")
+            )
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        return {r["shard"]: int(r["n"]) for r in rows}
 
     # ---------------- compiled rule dispatch ----------------------------
     def rule_score(self) -> F.Column:
@@ -395,26 +446,17 @@ class CrawlEngine:
             self._p("frontier", "base_v000000")
         )
         # per-shard pending counts ride in the checkpoint (O(shards) JSON):
-        # iteration metrics update them from the delta/tombstone aggregates
-        # instead of re-counting the whole frontier
-        shard_rows = (
-            fr_w.groupBy(
-                F.pmod("host_hash", F.lit(self.n_bloom_shards))
-                .cast("int").alias("shard")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        frontier_shards = {str(r["shard"]): int(r["n"]) for r in shard_rows}
+        # each iteration updates them from counts it already holds instead
+        # of re-counting the whole frontier
+        frontier_shards = {str(s): n for s, n in self._shard_counts(fr_w).items()}
         n_seeds = sum(frontier_shards.values())
-        self._write_seen(fr_w, 0)
+        seeds_seen = self._seen_rows(fr_w, 0)
+        self._write_seen(seeds_seen, self._p("seen", "iter=000000"))
         manifest = None
         if n_seeds >= self.bloom_min_seen:
             manifest = bloom.merge_shards(
-                self.spark.read.schema(SEEN_SCHEMA).parquet(
-                    self._p("seen", "iter=000000")
-                ),
-                None, self._p("bloom", "v000000"), self.n_bloom_shards,
+                seeds_seen, None, self._p("bloom", "v000000"),
+                self.n_bloom_shards,
                 expected_per_shard=self.bloom_expected_per_shard,
             )
         self._commit({
@@ -430,45 +472,61 @@ class CrawlEngine:
             "metrics": {"frontier_size": n_seeds},
         })
 
-    def _write_seen(self, df: DataFrame, k: int) -> None:
+    def _seen_rows(self, df: DataFrame, k: int) -> DataFrame:
         """Seen rows carry a 128-bit fingerprint (two independent xxhash64
         columns) so the J1 anti-join keys on longs, never url strings, and
-        land bucketed by the bloom shard (pmod(host_hash, n_shards) as a
-        directory partition) so the anti-join's seen scan prunes to the
-        shards the candidates touch. One file per shard per iteration (the
-        repartition): at 10^10 URLs this is the Iceberg table's bucket
-        spec; here it is plain hive-style directory partitioning."""
+        the bloom shard (pmod(host_hash, n_shards)) they land under."""
+        return df.select(
+            "url",
+            F.xxhash64("url").alias("url_hash"),
+            F.xxhash64("url", F.lit(1)).alias("url_hash2"),
+            "host_hash",
+            F.lit(k).alias("scheduled_iter"),
+            F.pmod("host_hash", F.lit(self.n_bloom_shards))
+            .cast("int").alias("shard"),
+        )
+
+    def _write_seen(self, rows: DataFrame, path: str) -> None:
+        """Seen rows land bucketed by shard (a directory partition) so the
+        anti-join's seen scan prunes to the shards the candidates touch.
+        One file per shard per write (the repartition): at 10^10 URLs this
+        is the Iceberg table's bucket spec; here it is plain hive-style
+        directory partitioning."""
         (
-            df.select(
-                "url",
-                F.xxhash64("url").alias("url_hash"),
-                F.xxhash64("url", F.lit(1)).alias("url_hash2"),
-                "host_hash",
-                F.lit(k).alias("scheduled_iter"),
-                F.pmod("host_hash", F.lit(self.n_bloom_shards))
-                .cast("int").alias("shard"),
-            )
-            .repartition(self.n_bloom_shards, "shard")
+            rows.repartition(self.n_bloom_shards, "shard")
             .write.mode("overwrite")
             .partitionBy("shard")
-            .parquet(self._p("seen", f"iter={k:06d}"))
+            .parquet(path)
         )
 
     # ---------------- one iteration ------------------------------------
     def step(self) -> dict:
+        try:
+            return self._step()
+        finally:  # later jobs must not be charged to the step's last phase
+            self.spark.sparkContext._jsc.clearJobGroup()
+
+    def _step(self) -> dict:
         ck = self.last_checkpoint()
         if ck is None:
             raise RuntimeError("init_from_seeds first")
         k = ck["iter"] + 1
+        sc = self.spark.sparkContext
         t0 = time.monotonic()
         phases: dict[str, float] = {}
-        _last = [t0]
+        running: list = [None, t0]  # phase name, start
 
-        def _mark(name: str) -> None:
+        def _phase(name: str | None) -> None:
+            """Close the running phase (its wall seconds go to phase_sec)
+            and tag the new one's Spark jobs with job group iter=k:name."""
             now = time.monotonic()
-            phases[name] = round(now - _last[0], 3)
-            _last[0] = now
+            if running[0]:
+                phases[running[0]] = round(now - running[1], 3)
+            running[:] = [name, now]
+            if name:
+                sc.setJobGroup(f"iter={k}:{name}", f"crawl iteration {k}: {name}")
 
+        _phase("admit")
         frontier = self.frontier_view(ck["iter"], ck.get("frontier_base"))
 
         if self.respect_robots and self.robots is not None:
@@ -484,10 +542,13 @@ class CrawlEngine:
         admitted = politeness.admit(
             eligible, self.per_host_budget, global_budget=remaining,
         ).select(*FRONTIER_COLS).cache()
-        n_admitted = admitted.count()
-        _mark("admit")
+        # one aggregate gives both the early-exit count and the per-shard
+        # admissions the pending counts drop by
+        adm_by_shard = self._shard_counts(admitted)
+        n_admitted = sum(adm_by_shard.values())
 
         if n_admitted == 0:
+            admitted.unpersist()
             size = sum(ck.get("frontier_shards", {}).values())
             metrics = {"admitted": 0, "frontier_size": size, "done": True}
             self._commit({**ck, "iter": k, "metrics": metrics})
@@ -499,6 +560,7 @@ class CrawlEngine:
         # cache: page/result/link consumers then do pruned column scans
         # (kind is a directory partition), and the engine never holds
         # millions of extraction rows on-heap.
+        _phase("fetch_extract_results")
         cdir = self._p("combined", f"iter={k:06d}")
         out = self.fetcher.fetch_extract(admitted)
         # zstd, not snappy: kind=page (the text landing) is ~97% of the
@@ -525,7 +587,7 @@ class CrawlEngine:
             enriched.write.mode("overwrite").parquet(
                 self._p("results", f"iter={k:06d}")
             )
-        _mark("fetch_extract_results")
+        _phase("crawled_write")
         (
             fetched.select(
                 "url", "host", "host_hash", "depth", "discovery_iter", "score",
@@ -534,15 +596,17 @@ class CrawlEngine:
             .write.mode("overwrite")
             .parquet(self._p("crawled", f"iter={k:06d}"))
         )
-        _mark("crawled_write")
 
-        n_fetched = fetched.count()  # pruned count over kind=page files
+        _phase("failed_write")
+        n_fetched = sum(_footer_rows(os.path.join(cdir, "kind=page")).values())
         n_missed = n_admitted - n_fetched
 
         # retry / failed split (Q5/Q6, …/crawler/SimpleWebCrawler.java:14,73-78)
-        # — computed only when something actually missed: the anti-join +
-        # failed write would otherwise be two wasted jobs per iteration.
+        # — computed only when something actually missed: the anti-join,
+        # the failed write and the per-shard retry count would otherwise be
+        # wasted jobs every iteration.
         retry = None
+        retry_by_shard: dict[int, int] = {}
         if n_missed > 0:
             missed = missed.cache()
             retry = missed.filter(F.col("retry_count") + 1 < self.max_retries).select(
@@ -553,13 +617,14 @@ class CrawlEngine:
             failed.select(
                 "url", F.lit("fetch_miss").alias("reason"), F.lit(k).alias("iter")
             ).write.mode("overwrite").parquet(self._p("failed", f"iter={k:06d}"))
-        _mark("failed_write")
+            retry_by_shard = self._shard_counts(retry)
 
         # link discovery → should_visit gate → score (F1/F2). Link rows
         # arrive resolved, normalized, one per (partition, out_url) and
         # already carrying the parent depth (the pass's map-side combine);
         # dedup them BEFORE the rule chain so the regex evals run on the
         # unique URL set, not every (src, out) edge.
+        _phase("frontier_write")
         uniq_links = (
             combined.filter(F.col("kind") == "link")
             .select(F.col("out_url").alias("url"),
@@ -584,7 +649,8 @@ class CrawlEngine:
         # J1 dedup vs seen (schedule-time semantics): bloom prefilter +
         # 128-bit-hash anti-join against the shard-pruned seen scan
         compact = ck.get("seen_compact")
-        seen = self.seen_df(ck["iter"], compact)
+        seen_dirs = self._seen_dirs(ck["iter"], compact)
+        seen = self._read_seen(seen_dirs)
         prune = ck.get("seen_total", 0) >= self.shard_prune_min_seen
         deduped = bloom.dedup_candidates(
             candidates, seen, ck.get("bloom_manifest"),
@@ -600,16 +666,31 @@ class CrawlEngine:
         # frontier' = (frontier − admitted) ∪ retries ∪ new. Past the
         # lsm_min_frontier gate this is maintained LSM-style: write ONLY
         # the O(Δ) delta (new + retries) and the O(admitted) tombstone
-        # versions; frontier_view() applies them at read time. A
-        # one-dir-per-iteration full rewrite is the single biggest write
-        # in the loop and O(frontier) at 10^10 URLs — but below the gate
-        # (cold start / small crawl, where delta ≈ frontier) the direct
-        # fold is the cheaper plan, so the engine picks per-iteration.
+        # versions; frontier_view() applies them at read time. Every
+        # compact_frontier_every iterations, and on every iteration below
+        # the gate (cold start / small crawl, where delta ≈ frontier and
+        # the log's fixed cost loses), the iteration instead folds the
+        # view into a fresh base: a compaction is that same single write,
+        # never an append followed by a re-read.
         delta = new_entries if retry is None else new_entries.unionByName(retry)
-        fbase = ck.get("frontier_base")
+        fbase = ck["frontier_base"]
         pending_total = sum(ck.get("frontier_shards", {}).values())
-        use_lsm = pending_total >= self.lsm_min_frontier
-        if use_lsm:
+        fold = pending_total < self.lsm_min_frontier or (
+            self.compact_frontier_every > 0
+            and k - fbase["upto"] >= self.compact_frontier_every
+        )
+        if fold:
+            bdir = self._p("frontier", f"base_v{k:06d}")
+            (
+                frontier.join(admitted.select("url"), "url", "left_anti")
+                .select(*FRONTIER_COLS)
+                .unionByName(delta)
+                .write.mode("overwrite")
+                .parquet(bdir)
+            )
+            fbase = {"path": bdir, "upto": k}
+            delta_w = self.spark.read.schema(FRONTIER_SCHEMA).parquet(bdir)
+        else:
             # adds and tombstones land in ONE partitioned write (kind=add
             # / kind=tomb subdirs): a second tiny write job costs ~1 s of
             # fixed job+committer latency per iteration on this box
@@ -637,78 +718,49 @@ class CrawlEngine:
             add_rows_df.unionByName(tomb_rows_df).write.mode(
                 "overwrite"
             ).partitionBy("kind").parquet(ldir)
-        else:
-            # small-frontier fold: one write, no tombstones, and the next
-            # iteration's view is a single dir scan
-            bdir = self._p("frontier", f"base_v{k:06d}")
-            (
-                frontier.join(admitted.select("url"), "url", "left_anti")
-                .select(*FRONTIER_COLS)
-                .unionByName(delta)
-                .write.mode("overwrite")
-                .parquet(bdir)
-            )
-            fbase = {"path": bdir, "upto": k}
-        dedup_cache = getattr(deduped, "_dedup_cache", None)
-        if dedup_cache is not None:
-            dedup_cache.unpersist(blocking=False)
-        _mark("frontier_write")
-
-        if use_lsm:
             # an iteration with no discoveries and no retries writes no
             # kind=add files at all — fall back to an empty local relation
-            ddir = self._p("frontier", f"log_v{k:06d}", "kind=add")
+            ddir = os.path.join(ldir, "kind=add")
             delta_w = (
                 self.spark.read.schema(FRONTIER_SCHEMA).parquet(ddir)
                 if os.path.exists(ddir)
                 else self.spark.createDataFrame([], FRONTIER_SCHEMA)
             )
-            new_w = delta_w.filter(
+        dedup_cache = getattr(deduped, "_dedup_cache", None)
+        if dedup_cache is not None:
+            dedup_cache.unpersist(blocking=False)
+
+        # this iteration's new URLs, read back from the frontier write (the
+        # link-discovery + dedup plan is never recomputed)
+        _phase("seen_write")
+        new_seen = self._seen_rows(
+            delta_w.filter(
                 (F.col("discovery_iter") == k) & (F.col("retry_count") == 0)
-            )
+            ),
+            k,
+        )
+        # seen compaction rides this write: when due, the new rows go
+        # straight into a fresh shard-partitioned baseline seen(k−1) ∪ new,
+        # and no seen/iter=k dir is written, so the anti-join's source list
+        # stays bounded at compact_seen_every dirs (the "10^5 parquet
+        # dirs in every plan" failure mode). Committed via the checkpoint
+        # below: a crash mid-write leaves an orphan dir that the resumed
+        # iteration simply rewrites.
+        n_tail = len(seen_dirs) - (1 if compact else 0)
+        if self.compact_seen_every and n_tail + 1 >= self.compact_seen_every:
+            sdir = self._p("seen", f"compact_{k:06d}")
+            self._write_seen(seen.unionByName(new_seen), sdir)
+            compact = {"path": sdir, "upto": k}
+            replaced = seen_dirs
         else:
-            base_w = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                fbase["path"]
-            )
-            new_w = base_w.filter(
-                (F.col("discovery_iter") == k) & (F.col("retry_count") == 0)
-            )
-        self._write_seen(new_w.select("url", "host_hash"), k)
-        _mark("seen_write")
-
-        # periodic frontier compaction (LSM mode): fold base ∪ deltas −
-        # tombstones into a fresh base so the admission read stays bounded
-        # at compact_frontier_every + 1 dirs and the tombstone broadcast
-        # stays small. Committed via the checkpoint below (crash-safe the
-        # same way seen compaction is).
-        if use_lsm and self.compact_frontier_every:
-            _, f_deltas, _ = self._frontier_dirs(k, fbase)
-            if len(f_deltas) >= self.compact_frontier_every:
-                cpath = self._p("frontier", f"base_v{k:06d}")
-                self.frontier_view(k, fbase).write.mode("overwrite").parquet(
-                    cpath
-                )
-                fbase = {"path": cpath, "upto": k}
-                _mark("frontier_compact")
-
-        # periodic seen compaction: fold the baseline + tail into one
-        # shard-partitioned dir so the anti-join's source list stays
-        # bounded (the "10^5 parquet dirs in every plan" failure mode).
-        # Committed via the checkpoint below — a crash mid-rewrite leaves
-        # an orphan dir and the next compaction simply redoes it.
-        if self.compact_seen_every:
-            n_tail = len(self._seen_dirs(k, compact)) - (1 if compact else 0)
-            if n_tail >= self.compact_seen_every:
-                cpath = self._p("seen", f"compact_{k:06d}")
-                (
-                    self.seen_df(k, compact)
-                    .repartition(self.n_bloom_shards, "shard")
-                    .write.mode("overwrite")
-                    .partitionBy("shard")
-                    .parquet(cpath)
-                )
-                compact = {"path": cpath, "upto": k}
-                _mark("seen_compact")
+            sdir = self._p("seen", f"iter={k:06d}")
+            self._write_seen(new_seen, sdir)
+            replaced = []
+        # new rows per shard from the footers of what was just written
+        # (minus the dirs a compaction replaced): no count job
+        old_rows = _footer_rows(*replaced)
+        new_by_shard = {int(p[len("shard="):]): n - old_rows.get(p, 0)
+                        for p, n in _footer_rows(sdir).items()}
 
         # incremental bloom: O(new rows), OR-merged into each shard's last
         # layer (merge_shards opens a larger layer when one fills). Below
@@ -718,93 +770,42 @@ class CrawlEngine:
         # later iterations only merge.
         manifest = ck.get("bloom_manifest")
         if manifest is None and ck.get("seen_total", 0) >= self.bloom_min_seen:
+            _phase("bloom_build")
             manifest = bloom.build_shards(
-                self.seen_df(k, compact),
+                self._read_seen(self._seen_dirs(k, compact)),
                 self._p("bloom", f"v{k:06d}"),
                 self.n_bloom_shards,
                 expected_per_shard=self.bloom_expected_per_shard,
             )
-            _mark("bloom_build")
-        elif manifest is not None:
-            manifest = bloom.merge_shards(
-                self.spark.read.schema(SEEN_SCHEMA).parquet(
-                    self._p("seen", f"iter={k:06d}")
-                ),
-                manifest,
-                self._p("bloom", f"v{k:06d}"),
-                self.n_bloom_shards,
-                expected_per_shard=self.bloom_expected_per_shard,
-            )
-        _mark("bloom_merge")
+        else:
+            _phase("bloom_merge")
+            if manifest is not None:
+                manifest = bloom.merge_shards(
+                    new_seen,
+                    manifest,
+                    self._p("bloom", f"v{k:06d}"),
+                    self.n_bloom_shards,
+                    expected_per_shard=self.bloom_expected_per_shard,
+                )
 
         # per-partition lineage metrics (north rule): admitted/new/frontier
-        # counts per host-hash shard. With the LSM frontier these are
-        # maintained INCREMENTALLY: two O(Δ)-input aggregates (delta adds,
-        # admitted tombstones) collected as O(shards) rows and folded into
-        # the running per-shard counts carried in the checkpoint — no
-        # O(frontier) count job anywhere in the loop.
-        shard = (
-            F.pmod("host_hash", F.lit(self.n_bloom_shards))
-            .cast("int").alias("shard")
-        )
-        tomb_rows = (
-            admitted.select(shard)
-            .groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("n_tomb"))
-            .collect()
-        )
-        new_by_shard: dict[int, int] = {}
-        adm_by_shard: dict[int, int] = {}
-        n_new = 0
-        for r in tomb_rows:
-            adm_by_shard[r["shard"]] = int(r["n_tomb"])
-        if use_lsm:
-            add_rows = (
-                delta_w.select(
-                    shard,
-                    (F.col("retry_count") == 0).cast("int").alias("is_new"),
-                )
-                .groupBy("shard")
-                .agg(F.count(F.lit(1)).alias("n_add"),
-                     F.sum("is_new").alias("n_new"))
-                .collect()
-            )
-            counts = {int(s): int(n)
-                      for s, n in ck.get("frontier_shards", {}).items()}
-            for r in add_rows:
-                counts[r["shard"]] = counts.get(r["shard"], 0) + int(r["n_add"])
-                new_by_shard[r["shard"]] = int(r["n_new"] or 0)
-                n_new += int(r["n_new"] or 0)
-            for r in tomb_rows:
-                counts[r["shard"]] = counts.get(r["shard"], 0) - int(r["n_tomb"])
-        else:
-            # below the LSM gate the fresh base was just written — count
-            # it directly (one O(frontier) aggregate, small by definition
-            # here); new-this-iteration rides as a conditional sum
-            base_rows = (
-                base_w.select(
-                    shard,
-                    ((F.col("discovery_iter") == k)
-                     & (F.col("retry_count") == 0)).cast("int").alias("is_new"),
-                )
-                .groupBy("shard")
-                .agg(F.count(F.lit(1)).alias("n_pending"),
-                     F.sum("is_new").alias("n_new"))
-                .collect()
-            )
-            counts = {}
-            for r in base_rows:
-                counts[r["shard"]] = int(r["n_pending"])
-                new_by_shard[r["shard"]] = int(r["n_new"] or 0)
-                n_new += int(r["n_new"] or 0)
+        # counts per host-hash shard, all from counts the step already
+        # holds: pending' = pending − admitted + new + retries per shard,
+        # folded into the running counts carried in the checkpoint — no
+        # count job, and no O(frontier) read, anywhere in the loop.
+        _phase("metrics_counts")
+        counts = {int(s): n for s, n in ck.get("frontier_shards", {}).items()}
+        for s, n in adm_by_shard.items():
+            counts[s] = counts.get(s, 0) - n
+        for by_shard in (new_by_shard, retry_by_shard):
+            for s, n in by_shard.items():
+                counts[s] = counts.get(s, 0) + n
+        n_new = sum(new_by_shard.values())
         frontier_size = sum(counts.values())
         shards_all = sorted(set(counts) | set(adm_by_shard) | set(new_by_shard))
         # O(shards) rows written driver-side with pyarrow: a Spark write
         # of a 16-row local DataFrame costs 3-5 s of job+committer
         # overhead per iteration on this box (measured) for zero benefit
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         mdir = self._p("metrics", f"iter={k:06d}")
         os.makedirs(mdir, exist_ok=True)
         pq.write_table(
@@ -820,7 +821,7 @@ class CrawlEngine:
             }),
             os.path.join(mdir, "part-00000.parquet"),
         )
-        _mark("metrics_counts")
+        _phase(None)
 
         metrics = {
             "admitted": n_admitted,
@@ -959,7 +960,8 @@ class CrawlEngine:
                 F.lit(0).alias("retry_count"),
             )
         ).cache()
-        n = readmit.count()
+        re_by_shard = self._shard_counts(readmit)
+        n = sum(re_by_shard.values())
         if n == 0:
             readmit.unpersist()
             return 0
@@ -972,13 +974,8 @@ class CrawlEngine:
         ).parquet(fdir)
         counts = {int(s): int(c)
                   for s, c in ck.get("frontier_shards", {}).items()}
-        for r in (
-            readmit.groupBy(
-                F.pmod("host_hash", F.lit(self.n_bloom_shards))
-                .cast("int").alias("shard")
-            ).agg(F.count(F.lit(1)).alias("n")).collect()
-        ):
-            counts[r["shard"]] = counts.get(r["shard"], 0) + int(r["n"])
+        for s, c in re_by_shard.items():
+            counts[s] = counts.get(s, 0) + c
         readmit.unpersist()
         self._commit({**ck,
                       "frontier_base": {"path": fdir, "upto": k},

@@ -7,7 +7,9 @@ written first, ONE atomic pointer swap last" (`CrawlEngine._commit` -> the
 store's commit()). Everything else (seen appends, frontier fold, LSM
 delta/tombstone log, bloom shard manifest) is plain data referenced BY the
 committed pointer, so swapping the pointer implementation swaps the whole
-durability story:
+durability story. An iteration writes each table once: an append, or, on
+a compaction iteration, the compacted table itself (never an append
+followed by a rewrite of it):
 
   filesystem (default)          Iceberg (production catalog)
   --------------------------    ------------------------------------------
@@ -15,9 +17,12 @@ durability story:
                                 metadata-pointer CAS plays the role of
                                 os.replace()
   seen/iter=k appends           fast-append snapshots on the `seen` table
-  frontier base_v{k} fold       overwrite snapshot (RTAS) on `frontier`
-  frontier log_v{k} add/tomb    fast-append to `frontier_log`; compaction
-                                = MERGE INTO frontier + expire_snapshots
+  seen/compact_k (compaction    overwrite snapshot (seen ∪ new rows) on
+    iteration: no seen/iter=k)    `seen` + expire_snapshots
+  frontier base_v{k} fold       overwrite snapshot (RTAS) on `frontier`;
+    (small frontier, or a         on a compaction iteration it replaces
+    compaction iteration)         the `frontier_log` too
+  frontier log_v{k} add/tomb    fast-append to `frontier_log`
   orphan dirs after a crash     uncommitted snapshots, expired by
                                 maintenance — same "redo is safe" story
 

@@ -102,13 +102,19 @@ def get_spark(
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
-    # the daemon is spawned by the JVM with the JVM's inherited PYTHONPATH;
-    # make sure this package is on it (a --py-files zip lands on the worker
-    # path via Spark itself, but plain PYTHONPATH=. runs would otherwise
-    # leave the daemon unable to import us — it degrades gracefully, but
-    # silently loses the preload win).
+    # the worker daemon (spark.python.daemon.module) is spawned before a
+    # task puts --py-files on sys.path, so the path this package was
+    # imported from must be on the daemon's own PYTHONPATH. Local masters
+    # launch the JVM from this process, which inherits os.environ; under
+    # spark-submit the JVM is already up, so the path goes to the workers
+    # through spark.executorEnv (PySpark hands it to every Python worker
+    # it starts). That path is the --py-files zip itself when the driver
+    # imported the package from it; a multi-host cluster whose executors
+    # see the archive elsewhere overrides it via SPARK_GRAFT_CONF.
     _pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if _pkg_root not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
+    if submit_mode:
+        builder = builder.config("spark.executorEnv.PYTHONPATH", _pkg_root)
+    elif _pkg_root not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
         os.environ["PYTHONPATH"] = (
             _pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
         ).rstrip(os.pathsep)

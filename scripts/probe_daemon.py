@@ -21,17 +21,20 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from dmp_crawler_spark.session import get_spark  # noqa: E402
-
 # Submit-mode detection: only hand master="" to get_spark when this
 # process was actually launched by spark-submit (its Py4J gateway env is
 # present), not merely in a shell that once sourced spark-env (round-4
 # advice: SPARK_ENV_LOADED leaks through exports and then 'A master URL
 # must be set' kills a plain `python scripts/probe_daemon.py`).
-# PROBE_MASTER overrides either way.
+# PROBE_MASTER overrides either way. Under spark-submit the package comes
+# from the --py-files zip alone: the checkout goes on sys.path only for
+# the in-process run, so a submit-mode probe measures the deployed archive.
 _submitted = "PYSPARK_GATEWAY_PORT" in os.environ or "SPARK_APPLICATION_ID" in os.environ
+if not _submitted:
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from dmp_crawler_spark.session import get_spark  # noqa: E402
+
 spark = get_spark(master=os.environ.get("PROBE_MASTER", "" if _submitted else None),
                   app_name="probe_daemon")
 

@@ -81,7 +81,7 @@ def _leg(state_dir: str, iters: int, init: bool) -> dict:
             ["rowkey", "family", "colsj"]),
         "frontier": df_hash(eng.frontier_df(k).select("url"), ["url"]),
         "seen": df_hash(
-            eng.seen_df(k, eng.last_checkpoint().get("compact")),
+            eng.seen_df(k, eng.last_checkpoint().get("seen_compact")),
             ["url_hash", "url_hash2"]),
     }
     print("LEGJSON:" + json.dumps(out), flush=True)

@@ -110,3 +110,43 @@ def test_live_worker_skips_unchanged_zip_rereads(spark):
     assert len(counts) == 4
     if sys.version_info < (3, 13):
         assert counts == [0, 0, 0, 0]
+
+
+def test_py_files_deployment_imports_from_zip(tmp_path):
+    """The deployment path: `spark-submit --py-files dist/dmp_crawler_spark.zip`
+    on a driver script in a temp cwd, with the checkout on no path. The
+    worker daemon is spawned before a task adds --py-files to sys.path, so
+    it can import the preload module (and every worker the package) only
+    from the zip that get_spark puts on the workers' PYTHONPATH; the driver
+    and every worker must import dmp_crawler_spark from inside the zip."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    archive = os.path.join(repo, "dist", "dmp_crawler_spark.zip")
+    submit = os.path.join(os.environ["SPARK_HOME"], "bin", "spark-submit")
+    driver = tmp_path / "driver.py"
+    driver.write_text(
+        "import json\n"
+        "import dmp_crawler_spark\n"
+        "from dmp_crawler_spark.session import get_spark\n"
+        "spark = get_spark(master='', app_name='py_files_deployment')\n"
+        "def where(rows):\n"
+        "    import dmp_crawler_spark as pkg\n"
+        "    yield pkg.__file__\n"
+        "files = spark.sparkContext.parallelize(range(4), 4)"
+        ".mapPartitions(where).collect()\n"
+        "print('FILES=' + json.dumps([dmp_crawler_spark.__file__] + files))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [submit, "--master", "local[2]", "--driver-memory", "1g",
+         "--py-files", archive, str(driver)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    line = next(s for s in out.stdout.splitlines() if s.startswith("FILES="))
+    files = json.loads(line[len("FILES="):])
+    assert len(files) == 5, files
+    for f in files:
+        assert f.startswith(archive + os.sep), files

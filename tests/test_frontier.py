@@ -20,6 +20,9 @@ from dmp_crawler_spark.frontier.urlnorm import (
 )
 
 N_URLS = 400
+# a seed on a host of its own that no corpus page answers: a fetch miss
+# every time it is admitted
+BOGUS = "http://nohost.example.com/article/99999999.html"
 
 
 @pytest.fixture(scope="module")
@@ -738,3 +741,210 @@ def test_iceberg_store_diagnoses_missing_catalog(spark):
 
     with pytest.raises(RuntimeError, match="spark.sql.catalog.crawl"):
         IcebergCheckpointStore(spark)
+
+
+def _seeds_with_miss(spark):
+    return spark.createDataFrame([(s, "") for s in _seeds() + [BOGUS]],
+                                 "seed string, site string")
+
+
+def test_step_counts_match_recounts(spark, corpus_path, tmp_path):
+    """The per-shard counts a step writes to metrics/iter=k come from work
+    the step already did (one admitted aggregate, parquet footers, the
+    cached misses), not from count jobs. On a crawl that folds and
+    appends the frontier, appends and compacts the seen set, and retries
+    a missing URL, every iteration's n_admitted, n_new and n_frontier
+    equal direct recounts of the pending view, the seen set and the
+    crawl log."""
+    import pyarrow.parquet as pq
+
+    engine = _mk_engine(spark, corpus_path, tmp_path, max_retries=2,
+                        compact_frontier_every=2, compact_seen_every=2)
+    engine.init_from_seeds(_seeds_with_miss(spark))
+    assert len(engine.run(max_iters=4)) == 4
+    # the bogus seed missed at iteration 1 and was requeued as a retry
+    assert engine.frontier_df(1).filter(
+        (F.col("url") == BOGUS) & (F.col("retry_count") == 1)).count() == 1
+
+    def shard_of(df):
+        return df.withColumn("shard", F.pmod("host_hash", F.lit(8)).cast("int"))
+
+    def by_shard(df) -> dict:
+        return {r["shard"]: r["n"]
+                for r in shard_of(df).groupBy("shard")
+                .agg(F.count(F.lit(1)).alias("n")).collect()}
+
+    last = engine.last_checkpoint()
+    seen = engine.seen_df(last["iter"], last["seen_compact"])
+    crawled = engine.crawled_df()
+    kinds = {"fold": set(), "log": set(), "seen_compact": set(), "seen_append": set()}
+    for k in range(1, 5):
+        with open(engine._ckpt_path(k)) as f:
+            ck = json.load(f)
+        kinds["fold" if ck["frontier_base"]["upto"] == k else "log"].add(k)
+        sc = ck["seen_compact"]
+        kinds["seen_compact" if sc and sc["upto"] == k else "seen_append"].add(k)
+
+        got = {r["shard"]: r for r in pq.read_table(
+            str(tmp_path / "metrics" / f"iter={k:06d}")).to_pylist()}
+
+        def col(name):
+            return {s: r[name] for s, r in got.items() if r[name]}
+
+        before = engine.frontier_df(k - 1)
+        after = engine.frontier_df(k)
+        admitted = before.join(after, ["url", "retry_count"], "left_anti")
+        assert col("n_admitted") == by_shard(admitted), k
+        # every crawled URL of iteration k was admitted at k
+        assert crawled.filter(F.col("crawl_iter") == k).join(
+            admitted, "url", "left_anti").count() == 0
+        assert col("n_new") == by_shard(seen.filter(F.col("scheduled_iter") == k)), k
+        assert col("n_frontier") == by_shard(after), k
+        assert sum(ck["frontier_shards"].values()) == after.count(), k
+        assert ck["metrics"]["new_urls"] == sum(col("n_new").values())
+        assert ck["metrics"]["fetched"] == crawled.filter(
+            F.col("crawl_iter") == k).count()
+    # the crawl covered every write shape the counts derive from
+    assert all(kinds.values()), kinds
+    assert last["seen_total"] == seen.count()
+
+
+# crash matrix: iteration 2 of this crawl compacts both the frontier (a
+# fold) and the seen set (seen(1) ∪ new in one write)
+CRASH_KW = dict(compact_frontier_every=2, compact_seen_every=1)
+CRASH_GATES = {
+    "gates_at_0": dict(bloom_min_seen=0, lsm_min_frontier=0,
+                       shard_prune_min_seen=0),
+    "default_gates": {
+        k: inspect.signature(CrawlEngine).parameters[k].default
+        for k in ("bloom_min_seen", "lsm_min_frontier", "shard_prune_min_seen")
+    },
+}
+# the parquet writes iteration 2 makes: combined spill, crawled, failed
+# (the bogus seed misses), frontier fold, seen compaction
+CRASH_WRITES = 5
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crawl_state(engine) -> dict:
+    """What a resumed crawl must reproduce exactly."""
+    ck = engine.last_checkpoint()
+    return {
+        "iter": ck["iter"],
+        "visits": _visit_sets(engine),
+        "seen": {r["url"] for r in engine.seen_df(
+            ck["iter"], ck["seen_compact"]).select("url").collect()},
+        "pending": {(r["url"], r["retry_count"]) for r in engine.frontier_view(
+            ck["iter"], ck["frontier_base"]).collect()},
+        "seen_total": ck["seen_total"],
+        "frontier_shards": ck["frontier_shards"],
+    }
+
+
+def _group_jobs(spark, k: int) -> dict:
+    """{phase: job ids} of the job groups iter=k:<phase>, polled until the
+    status store (fed asynchronously by the listener bus) stops changing."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    phases = ("admit", "fetch_extract_results", "crawled_write",
+              "failed_write", "frontier_write", "seen_write", "bloom_build",
+              "bloom_merge", "metrics_counts")
+    prev = None
+    while True:
+        cur = {p: set(tracker.getJobIdsForGroup(f"iter={k}:{p}")) for p in phases}
+        if cur == prev:
+            return cur
+        prev = cur
+        time.sleep(1.0)
+
+
+@pytest.fixture(scope="module", params=sorted(CRASH_GATES))
+def crash_ref(request, spark, corpus_path, tmp_path_factory):
+    """One uninterrupted 4-iteration crawl per gate setting, shared by the
+    crash cases; also records iteration 2's jobs per phase group."""
+    gates = CRASH_GATES[request.param]
+    engine = _mk_engine(spark, corpus_path,
+                        tmp_path_factory.mktemp(f"crash_ref_{request.param}"),
+                        **gates, **CRASH_KW)
+    engine.init_from_seeds(_seeds_with_miss(spark))
+    engine.run(max_iters=1)
+    # other crawls in the session run iterations with the same group ids
+    before = _group_jobs(spark, 2)
+    engine.step()
+    jobs = {p: len(ids - before[p]) for p, ids in _group_jobs(spark, 2).items()}
+    jobs = {p: n for p, n in jobs.items() if n}
+    engine.run(max_iters=2)
+    return request.param, _crawl_state(engine), jobs
+
+
+def test_crash_resume_matrix(spark, corpus_path, tmp_path, crash_ref, monkeypatch):
+    """Crash-idempotence at every write boundary of a compaction iteration.
+    Iteration 2 is crashed after its 1st, 2nd, … parquet write and then at
+    _commit; each attempt is a fresh engine on the same state dir, so every
+    later attempt reruns iteration 2 over the orphans the earlier ones
+    left (what a crash-looping driver produces). A fresh engine then
+    resumes to iteration 4, and the crawl must equal the uninterrupted
+    one: visit sets, seen set, pending row versions, seen_total and the
+    per-shard pending counts."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    name, ref, _ = crash_ref
+    kw = {**CRASH_GATES[name], **CRASH_KW}
+    engine = _mk_engine(spark, corpus_path, tmp_path, **kw)
+    engine.init_from_seeds(_seeds_with_miss(spark))
+    engine.run(max_iters=1)
+
+    real_parquet = DataFrameWriter.parquet
+    crashes = []
+    n = 0
+    while not crashes or crashes[-1] != "commit":
+        n += 1
+        calls = [0]
+
+        def parquet(self, *a, _n=n, _calls=calls, **k):
+            real_parquet(self, *a, **k)
+            _calls[0] += 1
+            if _calls[0] == _n:
+                raise _Crash(f"write {_n}")
+
+        def commit(ck):
+            raise _Crash("commit")
+
+        attempt = _mk_engine(spark, corpus_path, tmp_path, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", parquet)
+            m.setattr(attempt, "_commit", commit)
+            with pytest.raises(_Crash) as crash:
+                attempt.step()
+        crashes.append(str(crash.value))
+        # a crashed process takes its cached blocks with it
+        spark.catalog.clearCache()
+        assert attempt.last_checkpoint()["iter"] == 1
+    assert crashes == [f"write {i}" for i in range(1, CRASH_WRITES + 1)] + ["commit"]
+
+    resumed = _mk_engine(spark, corpus_path, tmp_path, **kw)
+    resumed.run(max_iters=3)
+    assert _crawl_state(resumed) == ref
+
+
+# jobs iteration 2 of the crash-matrix crawl runs per gate setting, and
+# what it ran while the step counted rows with count jobs and compacted
+# by re-reading its own appends
+STEP_JOBS = {"gates_at_0": 25, "default_gates": 18}
+COUNT_JOB_STEP_JOBS = {"gates_at_0": 31, "default_gates": 24}
+
+
+def test_step_job_groups(crash_ref):
+    """Each phase's Spark jobs run under the job group iter=k:<phase>. On
+    a compaction iteration the metrics phase runs no job at all (the
+    counts come from work the step already did) and the iteration's job
+    count is pinned below what it was before."""
+    name, _, jobs = crash_ref
+    assert "metrics_counts" not in jobs, jobs
+    assert {"admit", "fetch_extract_results", "frontier_write",
+            "seen_write"} <= set(jobs), jobs
+    assert sum(jobs.values()) == STEP_JOBS[name] < COUNT_JOB_STEP_JOBS[name], jobs
