@@ -44,6 +44,7 @@ Operator ↔ query map (SURVEY.md §2 ids in names):
   event_hourly / event_gaps  event-time analytics (streaming batch form)
   crawl_bfs_oracle    REAL CrawlEngine 3-iteration BFS vs unrolled SQL replay
   crawl_bfs_scale_path the same BFS with every scale gate at 0 (bloom, LSM)
+  crawl_bfs_expiry_oracle J2 freshness re-admission after that BFS crawl
   bmp_decode_stats    REAL (non-stub) BMP decode vs pixel-formula replay
   wav_decode_stats    REAL (non-stub) PCM-WAV decode vs sample-formula replay
   bmp_resize_stats    REAL NN image resize (decode→resize→re-encode→decode)
@@ -1211,7 +1212,7 @@ def multimodal_features_q(spark, d):
 _BFS_DIR_MEMO: list = [None]
 
 
-def _bfs_crawl(spark, d, **engine_kw):
+def _bfs_engine(spark, d, **engine_kw):
     """Hard three-gate oracle for the crawl BFS loop (round-4 verdict #1;
     …/main/CrawlerManager.java:53-108 — the crawler4j controller loop the
     whole engine reimplements). The 'web' is synthesized deterministically
@@ -1230,7 +1231,8 @@ def _bfs_crawl(spark, d, **engine_kw):
     frontier fold; checkpoint commits) and the oracle replays the same 3
     BFS iterations as unrolled SQL CTEs. Output = the visit log — budget,
     ordering, dedup, rule-gate and retry semantics are all load-bearing
-    in the value hash. engine_kw overrides CrawlEngine's scale gates."""
+    in the value hash. engine_kw overrides CrawlEngine's scale gates.
+    Returns the engine after the crawl."""
     import shutil
     import tempfile
     from dmp_crawler_spark.frontier.scheduler import CorpusFetcher, CrawlEngine
@@ -1312,13 +1314,33 @@ def _bfs_crawl(spark, d, **engine_kw):
     )
     eng.init_from_seeds(seeds)
     eng.run(max_iters=3)
+    return eng
+
+
+def _visit_log(eng):
     return eng.crawled_df().select("url", "host", "depth", "crawl_iter")
 
 
 def crawl_bfs_oracle(spark, d):
     """The BFS oracle crawl at the engine's default scale gates: the exact
     seen anti-join alone, the frontier folded into a fresh base."""
-    return _bfs_crawl(spark, d)
+    return _visit_log(_bfs_engine(spark, d))
+
+
+def crawl_bfs_expiry_oracle(spark, d):
+    """J2 freshness re-admission on the BFS oracle crawl: after iteration
+    3, readmit_expired(ttl_iters=1) puts every URL whose latest crawl is
+    at iteration ≤ 2 and that is not pending back into the frontier. The
+    output is the readmitted rows: the frontier after the readmission
+    minus the frontier before it."""
+    eng = _bfs_engine(spark, d)
+    ck = eng.last_checkpoint()
+    before = eng.frontier_view(ck["iter"], ck["frontier_base"])
+    eng.readmit_expired(ttl_iters=1)
+    ck = eng.last_checkpoint()
+    return eng.frontier_view(ck["iter"], ck["frontier_base"]).join(
+        before.select("url"), "url", "left_anti"
+    ).select("url", "host", "depth", "discovery_iter", "score", "retry_count")
 
 
 def crawl_bfs_scale_path(spark, d):
@@ -1327,11 +1349,11 @@ def crawl_bfs_scale_path(spark, d):
     shards (a 4-item first layer forces growth), shard-pruned seen
     anti-join, LSM frontier log and both compactions. The visit log must
     equal crawl_bfs_oracle's SQL replay."""
-    return _bfs_crawl(
+    return _visit_log(_bfs_engine(
         spark, d, bloom_min_seen=0, shard_prune_min_seen=0,
         lsm_min_frontier=0, compact_frontier_every=2, compact_seen_every=1,
         bloom_expected_per_shard=4,
-    )
+    ))
 
 
 def bmp_decode_stats(spark, d):
@@ -1920,7 +1942,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # their previous order, so every entry that misses one round's window
     # leads the next.
     return {
-        # --- no row in CORRECTNESS_r05.json, plus the new crawl_bfs_scale_path ---
+        # --- no row in CORRECTNESS_r05.json, plus the new crawl_bfs_scale_path
+        # and crawl_bfs_expiry_oracle ---
         "ann_topk": ann_topk,
         "embedding_near_pairs": embedding_near_pairs,
         "f3_regex_taxonomy": f3_regex_taxonomy,
@@ -1947,6 +1970,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_gaps": event_gaps,
         "j5_self_join_pairs": j5_self_join_pairs,
         "crawl_bfs_scale_path": crawl_bfs_scale_path,
+        "crawl_bfs_expiry_oracle": crawl_bfs_expiry_oracle,
         # --- checked in CORRECTNESS_r05.json, in their previous order ---
         "a3_count_distinct": a3_count_distinct,
         "w2_first_match": w2_first_match,
@@ -2022,7 +2046,7 @@ _SHINGLE_SQL = """
 # unrolled as CTEs — admission = per-host top-3 by the engine's
 # exact priority key; fetch-miss retry, link expansion, rule gate
 # and seen anti-join all replayed.
-_BFS_ORACLE_SQL = """
+_BFS_CTES = """
             WITH
             nn AS (SELECT CAST(count(*) AS BIGINT) AS n
                    FROM part WHERE p_partkey <= 400),
@@ -2060,7 +2084,7 @@ _BFS_ORACLE_SQL = """
                     FROM f0 f) WHERE rn <= 3
             ),
             crawl1 AS (
-              SELECT a.url, a.host, a.depth, 1 AS crawl_iter
+              SELECT a.url, a.host, a.depth, a.score, 1 AS crawl_iter
               FROM adm1 a JOIN pgu p ON a.i = p.i
             ),
             retry1 AS (
@@ -2097,7 +2121,7 @@ _BFS_ORACLE_SQL = """
                     FROM f1 f) WHERE rn <= 3
             ),
             crawl2 AS (
-              SELECT a.url, a.host, a.depth, 2 AS crawl_iter
+              SELECT a.url, a.host, a.depth, a.score, 2 AS crawl_iter
               FROM adm2 a JOIN pgu p ON a.i = p.i
             ),
             retry2 AS (
@@ -2134,12 +2158,52 @@ _BFS_ORACLE_SQL = """
                     FROM f2 f) WHERE rn <= 3
             ),
             crawl3 AS (
-              SELECT a.url, a.host, a.depth, 3 AS crawl_iter
+              SELECT a.url, a.host, a.depth, a.score, 3 AS crawl_iter
               FROM adm3 a JOIN pgu p ON a.i = p.i
+            ),
+            visits AS (
+              SELECT * FROM crawl1 UNION ALL SELECT * FROM crawl2
+              UNION ALL SELECT * FROM crawl3
+            )"""
+_BFS_ORACLE_SQL = _BFS_CTES + """
+            SELECT url, host, depth, crawl_iter FROM visits
+"""
+# ... and the expiry re-admission after it (crawl_bfs_expiry_oracle): the
+# frontier after iteration 3, the latest crawl per url, and every url
+# last crawled at iteration ≤ 3 − ttl (1) that is not pending
+_BFS_EXPIRY_ORACLE_SQL = _BFS_CTES + """,
+            retry3 AS (
+              SELECT a.url, a.host, a.depth, a.discovery_iter, a.score,
+                     a.retry_count + 1 AS retry_count, a.i
+              FROM adm3 a LEFT JOIN pgu p ON a.i = p.i
+              WHERE p.i IS NULL AND a.retry_count + 1 < 3
+            ),
+            new3 AS (
+              SELECT c.url, c.host, c.depth, 3 AS discovery_iter, c.score,
+                     0 AS retry_count, c.i
+              FROM (SELECT t.url, t.host, min(a.depth) + 1 AS depth,
+                           t.score, t.i
+                    FROM adm3 a
+                    JOIN edges e ON e.src = a.i
+                    JOIN pgu t ON t.i = e.dst
+                    WHERE t.score IS NOT NULL
+                    GROUP BY t.url, t.host, t.score, t.i) c
+              WHERE c.url NOT IN (SELECT url FROM seen2)
+            ),
+            f3 AS (
+              SELECT f.url FROM f2 f WHERE f.url NOT IN (SELECT url FROM adm3)
+              UNION ALL SELECT url FROM new3
+              UNION ALL SELECT url FROM retry3
+            ),
+            latest AS (
+              SELECT * FROM (SELECT v.*, row_number() OVER (
+                      PARTITION BY url ORDER BY crawl_iter DESC) AS rn
+                    FROM visits v) WHERE rn = 1
             )
-            SELECT url, host, depth, crawl_iter FROM crawl1
-            UNION ALL SELECT url, host, depth, crawl_iter FROM crawl2
-            UNION ALL SELECT url, host, depth, crawl_iter FROM crawl3
+            SELECT url, host, depth, 3 AS discovery_iter,
+                   CAST(score AS DOUBLE) AS score, 0 AS retry_count
+            FROM latest
+            WHERE crawl_iter <= 3 - 1 AND url NOT IN (SELECT url FROM f3)
 """
 
 
@@ -2149,6 +2213,7 @@ def oracle_sql() -> dict[str, str]:
         # to the same visit log
         "crawl_bfs_oracle": _BFS_ORACLE_SQL,
         "crawl_bfs_scale_path": _BFS_ORACLE_SQL,
+        "crawl_bfs_expiry_oracle": _BFS_EXPIRY_ORACLE_SQL,
         # re-derives the BMP decode output from the pixel formula alone
         # (no BMP bytes on the oracle side — see bmp_decode_stats)
         "bmp_decode_stats": """

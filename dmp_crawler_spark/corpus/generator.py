@@ -2,7 +2,7 @@
 
 Generates the `pages` table exactly per BASELINE.json input_hint —
 (url string, warc_ts timestamp, html binary, text string, lang string) —
-plus the seeds / robots / site_rules config tables (FIXTURES.md §2-4).
+plus the robots / site_rules config tables (FIXTURES.md §3-4).
 
 Generation is `spark.range(n) → mapInPandas`, so it scales horizontally:
 each partition builds its rows from the deterministic templates with no
@@ -16,7 +16,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dmp_crawler_spark.corpus import templates
@@ -92,19 +91,6 @@ class GeneratorFetcher:
         )
 
 
-def generate_seeds(spark: SparkSession, n_urls: int, n_seeds: int = 32) -> DataFrame:
-    """Seed list incl. range templates (SeedParser, common/SeedParser.java:5-31)."""
-    rows = []
-    for i in range(n_seeds):
-        idx = (i * 9973) % n_urls
-        rows.append((templates.url_for(idx, n_urls), templates.archetype_for(idx)))
-    # two range-template seeds exercising S1 seed expansion
-    h = templates.host_for(1, n_urls)
-    rows.append((f"http://{h}/bbs_post/[1-5].html", "bbs_post"))
-    rows.append((f"http://{h}/article/[10-14].html", "article"))
-    return spark.createDataFrame(rows, "seed string, site string")
-
-
 def generate_robots(spark: SparkSession, n_urls: int) -> DataFrame:
     """Per-host robots rules: every 7th host disallows /private/; deterministic
     crawl delays mirroring the reference sleeps (…/crawler/ms/Crawler4Dxy_BBS.java:170)."""
@@ -130,13 +116,4 @@ def generate_site_rules(spark: SparkSession) -> DataFrame:
     ]
     return spark.createDataFrame(
         rows, "site string, page_class string, url_regex string, score double, extractor string"
-    )
-
-
-def generate_dictionaries(spark: SparkSession, n: int = 1000) -> DataFrame:
-    """key→name dictionary mirroring name.properties lookups
-    (…/common/ConfigUtil.java:12-31)."""
-    return spark.range(n).select(
-        F.format_string("key%04d", F.col("id")).alias("key"),
-        F.format_string("名称%04d", F.col("id")).alias("name"),
     )

@@ -12,7 +12,8 @@ Output model mirrors the reference's 3-level HBase map
 
 Every fetcher runs fetch_extract_pass, so page landing, extraction and
 link discovery (HtmlParseData.getOutgoingUrls + addSeed, e.g.
-…/crawler/auto/Crawler4BitAuto.java:357,564) happen in one pass per page.
+…/crawler/auto/Crawler4BitAuto.java:357,564) happen in one pass per page,
+and its page or miss row is the crawl's one record of each fetch.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ def _decode(html) -> str:
 
 # columns the fetch+extract pass appends to the caller's meta columns
 PASS_FIELDS = [
-    T.StructField("kind", T.StringType(), False),  # 'page' | 'result' | 'link'
+    T.StructField("kind", T.StringType(), False),  # page|miss|result|link
     T.StructField("rowkey", T.StringType(), True),
     T.StructField("family", T.StringType(), True),
     T.StructField("cols", T.MapType(T.StringType(), T.StringType()), True),
@@ -63,17 +64,19 @@ _LINK_FLUSH = 500_000
 def fetch_extract_pass(
     df: DataFrame,
     meta: list[str],
-    page_of: Callable[[dict], tuple[str, str, str]],
+    page_of: Callable[[dict], tuple[str, str, str] | None],
 ) -> DataFrame:
     """Fused fetch+extract: ONE Python pass per input row, the production
     shape of crawler4j's visit() — download and parse in the same worker
     (…/main/CrawlerManager.java:102-108). page_of(row) -> (html, lang,
-    text) is the fetch; the html is consumed inside the worker and never
-    crosses the Arrow boundary. Output = the `meta` columns (which must
-    include url and depth) plus PASS_FIELDS, one of:
+    text), or None for a failed fetch, is the fetch; the html is consumed
+    inside the worker and never crosses the Arrow boundary. Output = the
+    `meta` columns (which must include url and depth) plus PASS_FIELDS,
+    one of:
 
-      kind='page'    one per input row: the pages-table landing (lang +
+      kind='page'    per fetched input row: the pages-table landing (lang +
                      boilerplate-stripped text; html bytes are elided)
+      kind='miss'    per failed input row: its meta columns only
       kind='result'  the oracle.extract rows (rowkey, family, cols)
       kind='link'    (url=src, out_url, depth) per discovered URL, out_url
                      already resolved (py_resolve_link ≡ urljoin) AND
@@ -130,7 +133,11 @@ def fetch_extract_pass(
                 rows["text"].append(text)
 
             for row in pdf.to_dict("records"):
-                html, lang, text = page_of(row)
+                page = page_of(row)
+                if page is None:
+                    emit(row, "miss")
+                    continue
+                html, lang, text = page
                 emit(row, "page", lang=lang, text=text)
                 src, d = row["url"], row["depth"]
                 for m in href_re.finditer(html):

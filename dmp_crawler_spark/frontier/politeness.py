@@ -33,16 +33,10 @@ def priority_window():
 
 
 def admit(frontier: DataFrame, per_host_budget: int,
-          global_budget: int | None = None,
-          delay_window_ms: int | None = None) -> DataFrame:
+          global_budget: int | None = None) -> DataFrame:
     """Rank pending frontier rows and admit ≤ budget per host (and
     optionally ≤ global_budget overall, lowest-rank-first — the
     setMaxPagesToFetch analog).
-
-    If the frontier carries a crawl_delay_ms column (robots-derived) and
-    delay_window_ms is given, the per-host budget shrinks to
-    floor(window/delay) for hosts with a delay — the declarative form of
-    the reference's per-host sleeps.
 
     Skew: a Zipf-hot host can hold a large fraction of a 10^10-row
     frontier, yet the plain host window stays skew-safe on Spark ≥3.5 —
@@ -54,18 +48,7 @@ def admit(frontier: DataFrame, per_host_budget: int,
     at 8-48M rows (BENCH/BASELINE.md §2q).
     """
     ranked = frontier.withColumn("rn", F.row_number().over(priority_window()))
-    if delay_window_ms is not None and "crawl_delay_ms" in frontier.columns:
-        budget = F.when(
-            F.coalesce(F.col("crawl_delay_ms"), F.lit(0)) > 0,
-            F.greatest(
-                F.lit(1),
-                F.floor(F.lit(delay_window_ms) / F.col("crawl_delay_ms")),
-            ),
-        ).otherwise(F.lit(per_host_budget))
-        budget = F.least(budget, F.lit(per_host_budget))
-    else:
-        budget = F.lit(per_host_budget)
-    admitted = ranked.filter(F.col("rn") <= budget)
+    admitted = ranked.filter(F.col("rn") <= per_host_budget)
     if global_budget is not None:
         # Global cap = exact top-K by the same total-order key. A
         # row_number() over an unpartitioned Window would funnel every

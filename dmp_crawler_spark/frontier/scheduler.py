@@ -21,9 +21,13 @@ Design for 10^10 URLs (the north rule):
     (view − admitted) ∪ Δ as a fresh base instead of a log, so no
     iteration appends and then re-reads what it appended. Below the gate
     every iteration folds (the cheaper plan at that size);
+  - one record per fetch: the fused pass's spill `combined/iter=k` holds
+    a kind=page or kind=miss row per admitted URL (plus its result and
+    link rows); the crawl log (crawled_df) is its page slice and the
+    retries are its miss slice;
   - no count job: the step's per-shard counts come from one aggregate
     over the cached admitted set, the parquet footers of what it wrote,
-    and (only when something missed) the cached misses — the loop never
+    and (only when something missed) the miss slice — the loop never
     re-reads or counts the O(frontier) pending set; each phase's jobs
     carry the job group `iter=k:<phase>`;
   - checkpointed per-partition lineage: each iteration commits a JSON
@@ -93,10 +97,10 @@ SEEN_SCHEMA = (
     "scheduled_iter int, shard int"
 )
 
-# results_df's read of the combined/iter=*/kind=* spill (iter and kind are
-# directory partitions)
-RESULTS_SCHEMA = (
-    "url string, rowkey string, family string, cols map<string,string>, "
+# results_df's and crawled_df's read of the combined/iter=*/kind=* spill
+# (iter and kind are directory partitions; text is never read)
+SPILL_SCHEMA = FRONTIER_SCHEMA + (
+    ", rowkey string, family string, cols map<string,string>, lang string, "
     "kind string, iter int"
 )
 
@@ -146,10 +150,11 @@ class EnrichmentSpec:
 
 class CorpusFetcher:
     """Simulated HTTP: the 'web' is the pages corpus table.
-    fetch_extract(admitted) inner-joins it on url and runs the shared
+    fetch_extract(admitted) left-joins it on url and runs the shared
     fetch+extract pass over the joined html; an admitted URL with no page
-    row is a fetch failure (S3 retry path). In production the join is
-    replaced by an HTTP GET inside page_of — same output contract."""
+    row is a fetch failure, a kind='miss' row (S3 retry path). In
+    production the join is replaced by an HTTP GET inside page_of — same
+    output contract."""
 
     def __init__(self, spark: SparkSession, pages_path: str):
         self.pages = spark.read.parquet(pages_path).select(
@@ -158,9 +163,10 @@ class CorpusFetcher:
 
     def fetch_extract(self, admitted: DataFrame) -> DataFrame:
         return fetch_extract_pass(
-            admitted.join(self.pages, "url"),
+            admitted.join(self.pages, "url", "left"),
             admitted.columns,
-            lambda row: (_decode(row["html"]), row["lang"], row["text"]),
+            lambda row: None if row["html"] is None
+            else (_decode(row["html"]), row["lang"], row["text"]),
         )
 
 
@@ -303,29 +309,17 @@ class CrawlEngine:
     def frontier_view(self, k: int, base: dict | None) -> DataFrame:
         """Pending frontier at iteration k: compaction base ∪ per-iteration
         deltas, minus the tombstoned (admitted) row versions. Base and
-        deltas are one multi-path scan, so the tombstone set (≤
-        compact_frontier_every × per-iteration admissions) is broadcast
-        once and the anti-join is map-side: the O(frontier) big side never
-        shuffles."""
+        deltas are one multi-path scan; the tombstone set (20 B/row, ≤
+        compact_frontier_every × per-iteration admissions) is small, so
+        the planner broadcasts it under autoBroadcastJoinThreshold and the
+        anti-join is map-side: the O(frontier) big side never shuffles.
+        Past the threshold it plans a plain anti-join instead."""
         base_path, deltas, tombs = self._frontier_dirs(k, base)
         fr = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
             *([base_path] if base_path else []), *deltas
         )
         if tombs:
             tomb = self.spark.read.schema(TOMB_SCHEMA).parquet(*tombs)
-            # broadcast only while the tombstone files are actually small
-            # (they are 20 B/row; compaction bounds them at
-            # compact_frontier_every × admissions). Past the cap, fall
-            # back to a plain anti-join and let AQE pick the strategy —
-            # force-broadcasting a multi-GB set would OOM the driver.
-            on_disk = sum(
-                os.path.getsize(os.path.join(root, f))
-                for t in tombs
-                for root, _, files in os.walk(t)
-                for f in files
-            )
-            if on_disk < 64 << 20:
-                tomb = F.broadcast(tomb)
             fr = (
                 fr.withColumn("url_hash", F.xxhash64("url"))
                 .withColumn("url_hash2", F.xxhash64("url", F.lit(1)))
@@ -557,9 +551,11 @@ class CrawlEngine:
         # ONE Python pass: fetch + extract + link discovery together; html
         # never crosses the Arrow boundary (udfs.fetch_extract_pass). The
         # pass is spilled to parquet partitioned by `kind` instead of a JVM
-        # cache: page/result/link consumers then do pruned column scans
-        # (kind is a directory partition), and the engine never holds
-        # millions of extraction rows on-heap.
+        # cache: page/miss/result/link consumers then do pruned column
+        # scans (kind is a directory partition), and the engine never
+        # holds millions of extraction rows on-heap. The spill is the
+        # iteration's only per-fetch record: one page or miss row per
+        # admitted URL.
         _phase("fetch_extract_results")
         cdir = self._p("combined", f"iter={k:06d}")
         out = self.fetcher.fetch_extract(admitted)
@@ -570,11 +566,17 @@ class CrawlEngine:
         out.write.mode("overwrite").option("compression", "zstd").partitionBy(
             "kind"
         ).parquet(cdir)
-        # explicit schema: an iteration where every admitted URL misses
-        # writes no kind= dirs, which schema inference cannot read
+        by_kind = _footer_rows(*(os.path.join(cdir, f"kind={x}")
+                                 for x in ("page", "miss")))
+        n_fetched = by_kind.get("kind=page", 0)
+        n_missed = by_kind.get("kind=miss", 0)
+        if n_fetched + n_missed != n_admitted:
+            admitted.unpersist()
+            raise RuntimeError(
+                f"iteration {k}: the fetcher returned {n_fetched} pages and "
+                f"{n_missed} misses for {n_admitted} admitted URLs"
+            )
         combined = self.spark.read.schema(out.schema).parquet(cdir)
-        fetched = combined.filter(F.col("kind") == "page")
-        missed = admitted.join(fetched.select("url"), "url", "left_anti")
         if self.enrichment:
             # second fetch pass(es) keyed by the pass-1 entity id; the
             # enriched copy lands in results/iter=k, which results_df
@@ -587,28 +589,15 @@ class CrawlEngine:
             enriched.write.mode("overwrite").parquet(
                 self._p("results", f"iter={k:06d}")
             )
-        _phase("crawled_write")
-        (
-            fetched.select(
-                "url", "host", "host_hash", "depth", "discovery_iter", "score",
-                F.lit(k).alias("crawl_iter"), "lang",
-            )
-            .write.mode("overwrite")
-            .parquet(self._p("crawled", f"iter={k:06d}"))
-        )
-
-        _phase("failed_write")
-        n_fetched = sum(_footer_rows(os.path.join(cdir, "kind=page")).values())
-        n_missed = n_admitted - n_fetched
-
         # retry / failed split (Q5/Q6, …/crawler/SimpleWebCrawler.java:14,73-78)
-        # — computed only when something actually missed: the anti-join,
-        # the failed write and the per-shard retry count would otherwise be
-        # wasted jobs every iteration.
+        # over the spill's miss slice — only when something actually
+        # missed: the failed write and the per-shard retry count would
+        # otherwise be wasted jobs every iteration.
+        _phase("failed_write")
         retry = None
         retry_by_shard: dict[int, int] = {}
         if n_missed > 0:
-            missed = missed.cache()
+            missed = combined.filter(F.col("kind") == "miss")
             retry = missed.filter(F.col("retry_count") + 1 < self.max_retries).select(
                 "url", "host", "host_hash", "depth", "discovery_iter", "score",
                 (F.col("retry_count") + 1).alias("retry_count"),
@@ -845,8 +834,6 @@ class CrawlEngine:
             "metrics": metrics,
         })
         admitted.unpersist()
-        if n_missed > 0:
-            missed.unpersist()
         return metrics
 
     def run(self, max_iters: int = 100) -> list[dict]:
@@ -859,8 +846,21 @@ class CrawlEngine:
         return out
 
     # ---------------- read-back helpers for tests/analysis -------------
+    def _spill(self, kind: str) -> DataFrame:
+        """One kind's slice of the committed iterations' spill. Both
+        filters prune partitions: a crash's orphan iteration never shows."""
+        ck = self.last_checkpoint()
+        return self.spark.read.schema(SPILL_SCHEMA).parquet(
+            self._p("combined")
+        ).filter((F.col("kind") == kind)
+                 & (F.col("iter") <= (ck["iter"] if ck else -1)))
+
     def crawled_df(self) -> DataFrame:
-        return self.spark.read.parquet(self._p("crawled"))
+        """The crawl log: one row per fetched page, from the spill."""
+        return self._spill("page").select(
+            "url", "host", "host_hash", "depth", "discovery_iter", "score",
+            F.col("iter").alias("crawl_iter"), "lang",
+        )
 
     # ---------------- J4 enrichment fetch (second pass) -----------------
     def _enrich(self, results: DataFrame, spec: EnrichmentSpec) -> DataFrame:
@@ -897,35 +897,20 @@ class CrawlEngine:
         )
 
     def results_df(self) -> DataFrame:
+        """Extraction rows of the committed iterations: an iteration's
+        enriched copy (results/iter=k) replaces its spill's result slice."""
         cols = ["url", "rowkey", "family", "cols"]
-        dfs = []
-        done_iters: set[int] = set()
-        if os.path.exists(self._p("results")):
-            dfs.append(self.spark.read.parquet(self._p("results")).select(*cols))
-            done_iters = {
-                int(n.split("=", 1)[1])
-                for n in os.listdir(self._p("results"))
-                if n.startswith("iter=")
-            }
-        if os.path.exists(self._p("combined")):
-            # explicit schema: an all-miss iteration's dir holds no files
-            combined = self.spark.read.schema(RESULTS_SCHEMA).parquet(
-                self._p("combined")
-            ).filter(F.col("kind") == "result")
-            if done_iters:
-                # an iteration with a results/ dir (the enriched copy) must
-                # not be double-counted from its combined slice; the filter
-                # is partition pruning — iter is a directory column
-                combined = combined.filter(
-                    ~F.col("iter").cast("int").isin(*done_iters)
-                )
-            dfs.append(combined.select(*cols))
-        if not dfs:
-            raise FileNotFoundError("no results written yet")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        out = self._spill("result").select(*cols, "iter")
+        rdir = self._p("results")
+        if os.path.exists(rdir):
+            # iter is a directory column: both filters prune partitions
+            done = [int(n.split("=", 1)[1]) for n in os.listdir(rdir)
+                    if n.startswith("iter=")]
+            out = out.filter(~F.col("iter").isin(*done)).unionByName(
+                self.spark.read.parquet(rdir).select(*cols, "iter")
+                .filter(F.col("iter") <= self.last_checkpoint()["iter"])
+            )
+        return out.select(*cols)
 
     # ---------------- J2 freshness re-admit ----------------------------
     def readmit_expired(self, ttl_iters: int) -> int:

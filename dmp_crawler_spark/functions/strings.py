@@ -99,18 +99,13 @@ def complete_datetime(col: Column | str) -> Column:
     )
 
 
-# C8 — 'yyyy-M-d H:m:s' → zero-padded ('yyyyMMdd', 'HHmmss') pair
+# C8 — 'yyyy-M-d H:m:s' → zero-padded 'yyyyMMdd'
 # (crawler/auto/Crawler4Autohome.java:447-458).
 
 
 def compact_date(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(F.try_to_timestamp(c, F.lit("yyyy-M-d H:m:s")), "yyyyMMdd")
-
-
-def compact_time(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(F.try_to_timestamp(c, F.lit("yyyy-M-d H:m:s")), "HHmmss")
 
 
 # C9 — locale datetime parse: java.util.Date.toString() form

@@ -14,7 +14,7 @@ the controlled experiment). Reported per iteration: admitted rows,
 elapsed seconds, normalized cost (ms per admitted URL), per-phase split.
 The headline statistic is drift = mean(ms/url over last 5 steady iters) /
 mean(ms/url over first 5 steady iters): flat ⇒ ~1.0 while cumulative
-state (seen set, frontier log, crawled output) grows ~20× — any
+state (seen set, frontier log, fetch spill) grows ~20× — any
 per-iteration term proportional to CUMULATIVE state would show as a
 rising trend. Sandbox co-tenant steal adds noise; the BENCH/BASELINE.md
 §2b variance band applies, so per-iteration steal is sampled too.
@@ -43,9 +43,11 @@ Round-5 knobs (default-gate 10M+ soak, round-4 verdict items 2+6):
                 ~97% of the soak's bytes and at 10M+ crawled would blow
                 the sandbox disk; in production those rows land in the
                 Iceberg pages table (external storage), not the engine
-                state dir, so pruning models the real layout. Frontier /
-                seen / bloom / checkpoints — the actual resume state —
-                are never touched.
+                state dir, so pruning models the real layout. The
+                crawl log (crawled_df, the spill's page slice) and
+                results_df go with them; the soak reads neither.
+                Frontier / seen / bloom / checkpoints — the actual resume
+                state — are never touched.
 """
 
 from __future__ import annotations

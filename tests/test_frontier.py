@@ -152,8 +152,13 @@ def test_failed_urls_retry_then_fail(spark, corpus_path, tmp_path):
     engine.run(max_iters=4)
     failed = spark.read.parquet(str(tmp_path / "failed")).collect()
     assert any(r["url"] == bogus for r in failed)
-    # every iteration missed, so the spill holds no kind= dirs at all
+    # every iteration missed: the spill holds one miss row per attempt
     assert engine.results_df().count() == 0
+    assert engine.crawled_df().count() == 0
+    misses = spark.read.parquet(str(tmp_path / "combined")).filter(
+        F.col("kind") == "miss").select("url", "retry_count", "iter").collect()
+    assert sorted((r["iter"], r["retry_count"]) for r in misses) == [(1, 0), (2, 1)]
+    assert {r["url"] for r in misses} == {bogus}
 
 
 def test_bloom_prefilter_no_false_negatives(spark):
@@ -751,7 +756,7 @@ def _seeds_with_miss(spark):
 def test_step_counts_match_recounts(spark, corpus_path, tmp_path):
     """The per-shard counts a step writes to metrics/iter=k come from work
     the step already did (one admitted aggregate, parquet footers, the
-    cached misses), not from count jobs. On a crawl that folds and
+    spill's miss slice), not from count jobs. On a crawl that folds and
     appends the frontier, appends and compacts the seen set, and retries
     a missing URL, every iteration's n_admitted, n_new and n_frontier
     equal direct recounts of the pending view, the seen set and the
@@ -820,9 +825,9 @@ CRASH_GATES = {
         for k in ("bloom_min_seen", "lsm_min_frontier", "shard_prune_min_seen")
     },
 }
-# the parquet writes iteration 2 makes: combined spill, crawled, failed
-# (the bogus seed misses), frontier fold, seen compaction
-CRASH_WRITES = 5
+# the parquet writes iteration 2 makes: combined spill, failed (the bogus
+# seed misses), frontier fold, seen compaction
+CRASH_WRITES = 4
 
 
 class _Crash(Exception):
@@ -850,9 +855,9 @@ def _group_jobs(spark, k: int) -> dict:
     import time
 
     tracker = spark.sparkContext.statusTracker()
-    phases = ("admit", "fetch_extract_results", "crawled_write",
-              "failed_write", "frontier_write", "seen_write", "bloom_build",
-              "bloom_merge", "metrics_counts")
+    phases = ("admit", "fetch_extract_results", "failed_write",
+              "frontier_write", "seen_write", "bloom_build", "bloom_merge",
+              "metrics_counts")
     prev = None
     while True:
         cur = {p: set(tracker.getJobIdsForGroup(f"iter={k}:{p}")) for p in phases}
@@ -889,7 +894,8 @@ def test_crash_resume_matrix(spark, corpus_path, tmp_path, crash_ref, monkeypatc
     left (what a crash-looping driver produces). A fresh engine then
     resumes to iteration 4, and the crawl must equal the uninterrupted
     one: visit sets, seen set, pending row versions, seen_total and the
-    per-shard pending counts."""
+    per-shard pending counts. Between the crashes, the crawl log and the
+    results show iteration 1 only: the orphans never do."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     name, ref, _ = crash_ref
@@ -897,6 +903,13 @@ def test_crash_resume_matrix(spark, corpus_path, tmp_path, crash_ref, monkeypatc
     engine = _mk_engine(spark, corpus_path, tmp_path, **kw)
     engine.init_from_seeds(_seeds_with_miss(spark))
     engine.run(max_iters=1)
+
+    def reads(e):
+        return _visit_sets(e), sorted(tuple(r) for r in e.results_df().select(
+            "url", "rowkey", "family").collect())
+
+    committed = reads(engine)
+    assert list(committed[0]) == [1] and committed[1]
 
     real_parquet = DataFrameWriter.parquet
     crashes = []
@@ -924,6 +937,7 @@ def test_crash_resume_matrix(spark, corpus_path, tmp_path, crash_ref, monkeypatc
         # a crashed process takes its cached blocks with it
         spark.catalog.clearCache()
         assert attempt.last_checkpoint()["iter"] == 1
+        assert reads(attempt) == committed, crashes[-1]
     assert crashes == [f"write {i}" for i in range(1, CRASH_WRITES + 1)] + ["commit"]
 
     resumed = _mk_engine(spark, corpus_path, tmp_path, **kw)
@@ -933,8 +947,9 @@ def test_crash_resume_matrix(spark, corpus_path, tmp_path, crash_ref, monkeypatc
 
 # jobs iteration 2 of the crash-matrix crawl runs per gate setting, and
 # what it ran while the step counted rows with count jobs and compacted
-# by re-reading its own appends
-STEP_JOBS = {"gates_at_0": 25, "default_gates": 18}
+# by re-reading its own appends (it also wrote a crawled/ copy of its
+# pages and found its misses by an anti-join then: 3 jobs more)
+STEP_JOBS = {"gates_at_0": 22, "default_gates": 15}
 COUNT_JOB_STEP_JOBS = {"gates_at_0": 31, "default_gates": 24}
 
 
@@ -948,3 +963,34 @@ def test_step_job_groups(crash_ref):
     assert {"admit", "fetch_extract_results", "frontier_write",
             "seen_write"} <= set(jobs), jobs
     assert sum(jobs.values()) == STEP_JOBS[name] < COUNT_JOB_STEP_JOBS[name], jobs
+
+
+class _DroppingFetcher(CorpusFetcher):
+    """Loses the bogus seed's miss row, or lands one page twice."""
+
+    def __init__(self, spark, path, dup: bool):
+        super().__init__(spark, path)
+        self.dup = dup
+
+    def fetch_extract(self, admitted):
+        out = super().fetch_extract(admitted)
+        if self.dup:
+            return out.unionByName(out.filter(F.col("kind") == "page").limit(1))
+        return out.filter(F.col("url") != BOGUS)
+
+
+def test_step_raises_unless_one_record_per_fetch(spark, corpus_path, tmp_path):
+    """A fetcher must emit exactly one page or miss row per admitted URL:
+    a dropped row would be retried silently and a duplicated page crawled
+    twice, so the step raises before it commits."""
+    _mk_engine(spark, corpus_path, tmp_path).init_from_seeds(
+        _seeds_with_miss(spark))
+    for dup in (False, True):
+        engine = _mk_engine(spark, corpus_path, tmp_path)
+        engine.fetcher = _DroppingFetcher(spark, corpus_path, dup)
+        with pytest.raises(RuntimeError, match="admitted URLs"):
+            engine.step()
+        assert engine.last_checkpoint()["iter"] == 0
+    engine = _mk_engine(spark, corpus_path, tmp_path)
+    m = engine.step()
+    assert m["fetched"] + m["failed"] == m["admitted"] and m["failed"] > 0

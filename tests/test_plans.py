@@ -143,7 +143,9 @@ def test_frontier_lsm_tombstone_join_is_broadcast(spark, tmp_path):
     """The LSM frontier view's tombstone anti-join must broadcast the
     O(admitted) tombstone side — the O(frontier) pending side never
     shuffles. A sort-merge anti-join here would re-shuffle 10^10 pending
-    rows every iteration just to subtract the admitted set."""
+    rows every iteration just to subtract the admitted set. The planner
+    decides from spark.sql.autoBroadcastJoinThreshold: past it (here 1
+    byte) the view plans no broadcast join and keeps the same rows."""
     from dmp_crawler_spark.frontier.scheduler import (
         FRONTIER_COLS, FRONTIER_SCHEMA, CrawlEngine,
     )
@@ -183,12 +185,25 @@ def test_frontier_lsm_tombstone_join_is_broadcast(spark, tmp_path):
         )
     ).write.partitionBy("kind").parquet(ldir)
 
-    view = eng.frontier_view(1, {"path": eng._p("frontier", "base_v000000"),
-                                 "upto": 0})
-    plan = inspect.physical_plan(view)
+    def view():
+        return eng.frontier_view(
+            1, {"path": eng._p("frontier", "base_v000000"), "upto": 0})
+
+    plan = inspect.physical_plan(view())
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
-    assert view.count() == 50 + 5 - 9
+    assert view().count() == 50 + 5 - 9
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        plan = inspect.physical_plan(view())
+        n = view().count()
+    finally:
+        spark.conf.set(key, prev)
+    assert "LeftAnti" in plan and "Broadcast" not in plan
+    assert n == 50 + 5 - 9
 
 
 def test_oracle_queries_use_wholestage_codegen(spark):
