@@ -217,8 +217,8 @@ def prefilter(candidates: DataFrame, manifest_path: str | None) -> DataFrame:
 
 
 def dedup_candidates(candidates: DataFrame, seen: DataFrame | None,
-                     manifest_path: str | None,
-                     n_shards: int | None = None) -> DataFrame:
+                     manifest_path: str | None, n_shards: int | None = None,
+                     ) -> tuple[DataFrame, DataFrame | None]:
     """Full J1 dedup (…/social/worker/WXEntityImporter.java:105-144 semantics,
     engine-scale plan): bloom prefilter → exact left_anti for the
     maybe-seen slice → union with the definitely-new slice.
@@ -240,11 +240,15 @@ def dedup_candidates(candidates: DataFrame, seen: DataFrame | None,
     With manifest_path=None (bloom gated off below the engine's
     bloom_min_seen threshold) every candidate goes straight
     to the exact anti-join — no Arrow prefilter round trip, no persist
-    unless the shard-prune collect needs one."""
+    unless the shard-prune collect needs one.
+
+    Returns (new candidates, the frame this plan persisted or None). The
+    caller owns the persisted frame: it unpersists it once the plan is
+    consumed (CrawlEngine.step does so after the frontier write)."""
     have_bloom = manifest_path is not None and os.path.exists(manifest_path)
     tagged = prefilter(candidates, manifest_path) if have_bloom else candidates
     if seen is None:
-        return tagged.drop("maybe_seen") if have_bloom else tagged
+        return (tagged.drop("maybe_seen") if have_bloom else tagged), None
     cache = None
     if have_bloom:
         # materialize the tagged candidates once: the shard-set collect
@@ -283,8 +287,4 @@ def dedup_candidates(candidates: DataFrame, seen: DataFrame | None,
         if definitely_new is not None
         else survived
     )
-    # the caller owns the cache lifetime: unpersist after the plan is
-    # consumed (CrawlEngine.step does this after the frontier write)
-    if cache is not None:
-        out._dedup_cache = cache
-    return out
+    return out, cache

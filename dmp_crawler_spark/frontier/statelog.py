@@ -22,7 +22,9 @@ followed by a rewrite of it):
   frontier base_v{k} fold       overwrite snapshot (RTAS) on `frontier`;
     (small frontier, or a         on a compaction iteration it replaces
     compaction iteration)         the `frontier_log` too
-  frontier log_v{k} add/tomb    fast-append to `frontier_log`
+  frontier log_v{k} add/tomb    fast-append to `frontier_log`; a tomb (an
+    (both frontier rows)          admitted row) is an equality delete on
+                                  (url_hash, url_hash2, retry_count)
   orphan dirs after a crash     uncommitted snapshots, expired by
                                 maintenance — same "redo is safe" story
 

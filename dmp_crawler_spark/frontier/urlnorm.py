@@ -6,6 +6,8 @@ declarative so Catalyst keeps it inside whole-stage codegen:
   - strip fragment, lowercase scheme+host, drop default port
   - host + host_hash = xxhash64(host) — the key the engine partitions
     crawl state and politeness admission on
+  - url_hash + url_hash2 = xxhash64(url), xxhash64(url, 1) — the 128-bit
+    URL fingerprint, computed here once; every later stage reads it
 
 Relative hrefs are resolved inside the fused fetch+extract pass
 (py_resolve_link ≡ urljoin ≙ crawler4j absUrl), which also applies the
@@ -90,8 +92,11 @@ def py_resolve_link(src: str, href: str) -> str:
 
 
 def with_url_cols(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Attach (host, host_hash) — the engine's partition key columns."""
-    return df.withColumn("host", host_of(url_col)).withColumn(
-        "host_hash", F.xxhash64(F.col("host"))
-    )
+    """Attach (host, host_hash) — the engine's partition key columns — and
+    the URL fingerprint (url_hash, url_hash2)."""
+    return df.withColumns({
+        "host": host_of(url_col),
+        "url_hash": F.xxhash64(url_col),
+        "url_hash2": F.xxhash64(url_col, F.lit(1)),
+    }).withColumn("host_hash", F.xxhash64("host"))
 

@@ -143,12 +143,13 @@ def test_frontier_lsm_tombstone_join_is_broadcast(spark, tmp_path):
     """The LSM frontier view's tombstone anti-join must broadcast the
     O(admitted) tombstone side — the O(frontier) pending side never
     shuffles. A sort-merge anti-join here would re-shuffle 10^10 pending
-    rows every iteration just to subtract the admitted set. The planner
-    decides from spark.sql.autoBroadcastJoinThreshold: past it (here 1
-    byte) the view plans no broadcast join and keeps the same rows."""
-    from dmp_crawler_spark.frontier.scheduler import (
-        FRONTIER_COLS, FRONTIER_SCHEMA, CrawlEngine,
-    )
+    rows every iteration just to subtract the admitted set. The log's
+    add and tomb halves are plain frontier rows that carry the URL
+    fingerprint, so the view hashes nothing. The planner decides from
+    spark.sql.autoBroadcastJoinThreshold: past it (here 1 byte) the view
+    plans no broadcast join and keeps the same rows."""
+    from dmp_crawler_spark.frontier.scheduler import FRONTIER_COLS, CrawlEngine
+    from dmp_crawler_spark.frontier.urlnorm import with_url_cols
 
     rules = spark.createDataFrame(
         [("h.x", ".*", "article", 1.0)],
@@ -156,34 +157,22 @@ def test_frontier_lsm_tombstone_join_is_broadcast(spark, tmp_path):
     )
     eng = CrawlEngine(spark, str(tmp_path / "state"), fetcher=None,
                       site_rules=rules)
-    rows = [
-        (f"http://h{i % 3}.x/{i}", f"h{i % 3}.x", i % 3, 0, 0, 1.0, 0)
-        for i in range(50)
-    ]
-    base = spark.createDataFrame(rows, FRONTIER_SCHEMA)
+
+    def frontier_rows(urls, depth):
+        return with_url_cols(
+            spark.createDataFrame([(u,) for u in urls], "url string")
+        ).withColumns({
+            "depth": F.lit(depth), "discovery_iter": F.lit(depth),
+            "score": F.lit(1.0), "retry_count": F.lit(0),
+        }).select(*FRONTIER_COLS)
+
+    base = frontier_rows([f"http://h{i % 3}.x/{i}" for i in range(50)], 0)
     base.write.parquet(eng._p("frontier", "base_v000000"))
-    ldir = eng._p("frontier", "log_v000001")
-    adds = spark.createDataFrame(
-        [(f"http://h0.x/new{i}", "h0.x", 0, 1, 1, 1.0, 0) for i in range(5)],
-        FRONTIER_SCHEMA,
-    )
-    adds.select(
-        *FRONTIER_COLS,
-        F.lit(None).cast("long").alias("url_hash"),
-        F.lit(None).cast("long").alias("url_hash2"),
-        F.lit("add").alias("kind"),
-    ).unionByName(
-        base.limit(9).select(
-            *[F.lit(None).cast(t).alias(c) for c, t in (
-                ("url", "string"), ("host", "string"), ("host_hash", "long"),
-                ("depth", "int"), ("discovery_iter", "int"),
-                ("score", "double"))],
-            F.col("retry_count"),
-            F.xxhash64("url").alias("url_hash"),
-            F.xxhash64("url", F.lit(1)).alias("url_hash2"),
-            F.lit("tomb").alias("kind"),
-        )
-    ).write.partitionBy("kind").parquet(ldir)
+    adds = frontier_rows([f"http://h0.x/new{i}" for i in range(5)], 1)
+    tombs = frontier_rows([f"http://h{i % 3}.x/{i}" for i in range(9)], 0)
+    adds.withColumn("kind", F.lit("add")).unionByName(
+        tombs.withColumn("kind", F.lit("tomb"))
+    ).write.partitionBy("kind").parquet(eng._p("frontier", "log_v000001"))
 
     def view():
         return eng.frontier_view(
@@ -192,6 +181,10 @@ def test_frontier_lsm_tombstone_join_is_broadcast(spark, tmp_path):
     plan = inspect.physical_plan(view())
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
+    assert "xxhash64" not in plan.lower()
+    # the tombstone (build) side is the broadcast one
+    assert any("BroadcastHashJoin" in l and "LeftAnti" in l and "BuildRight" in l
+               for l in plan.splitlines()), plan
     assert view().count() == 50 + 5 - 9
 
     key = "spark.sql.autoBroadcastJoinThreshold"
